@@ -82,9 +82,16 @@ def encode_bmp(width: int, height: int, pix) -> bytes:
 
 
 def encode_wav(samples, rate: int) -> bytes:
-    """PCM16 mono RIFF/WAVE from an int16 iterable (or ndarray of
-    values already in [-32768, 32767] — then packed vectorized)."""
-    if isinstance(samples, np.ndarray):
+    """PCM16 mono RIFF/WAVE from an int16 iterable (or an integer
+    ndarray — then packed vectorized; other ndarrays take the iterable
+    path).  Both forms raise the same ``struct.error`` on a sample
+    outside [-32768, 32767]."""
+    if isinstance(samples, np.ndarray) and samples.dtype.kind in "biu":
+        bad = (samples < -32768) | (samples > 32767)
+        if bad.any():
+            # re-pack the first offending sample so the error is the one
+            # the iterable path raises, never a silent int16 wrap
+            struct.pack("<h", samples[bad][0].item())
         data = samples.astype("<i2").tobytes()
     else:
         data = struct.pack(f"<{len(samples)}h", *samples)
@@ -292,17 +299,23 @@ def synthesize_media_blob(mid: int) -> tuple[str, bytes]:
     take the encoders' vectorized paths — bytes identical to the
     per-element lambdas (pinned by test_multimodal)."""
     p = _media_params(mid)
+    # the id-dependent terms are reduced with Python ints BEFORE they
+    # meet the int64 index arrays, so any bigint id gives the bytes the
+    # arbitrary-precision per-element formulas give
     if p["kind"] == "image":
         idx = np.arange(p["w"] * p["h"], dtype=np.int64)
-        return "image", encode_bmp(p["w"], p["h"], (mid * 31 + idx * 7) % 256)
+        return "image", encode_bmp(
+            p["w"], p["h"], ((mid * 31) % 256 + idx * 7) % 256
+        )
     if p["kind"] == "audio":
         idx = np.arange(p["n"], dtype=np.int64)
         return "audio", encode_wav(
-            ((mid * 7 + idx * 13) % 65536) - 32768, p["rate"]
+            (((mid * 7) % 65536 + idx * 13) % 65536) - 32768, p["rate"]
         )
     idx = np.arange(p["w"] * p["h"], dtype=np.int64)
     frames = [
-        (mid * 17 + f * 101 + idx * 3) % 256 for f in range(p["nframes"])
+        ((mid * 17 + f * 101) % 256 + idx * 3) % 256
+        for f in range(p["nframes"])
     ]
     return "video", encode_cvid(p["w"], p["h"], p["fps"], frames)
 

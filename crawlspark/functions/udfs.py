@@ -9,6 +9,7 @@ worker and are reused across batches (SURVEY §4 P6).
 from __future__ import annotations
 
 import json
+import re
 from functools import lru_cache
 
 import pandas as pd
@@ -115,10 +116,8 @@ def _sort_query(query: str) -> str:
 # reduces to deleting "seg/../" — one compiled substitution.  ("seg"
 # cannot itself be a dot segment, or the count would be 2; a trailing
 # "/.." keeps a popped trailing slash and stays on the slow function.)
-import re as _re_mod
-
-_DOTSEG_SCAN_RX = _re_mod.compile(r"(?:^|/)\.{1,2}(?=/|\Z)")
-_ONE_DOTDOT_RX = _re_mod.compile(r"/[^/]+/\.\./")
+_DOTSEG_SCAN_RX = re.compile(r"(?:^|/)\.{1,2}(?=/|\Z)")
+_ONE_DOTDOT_RX = re.compile(r"/[^/]+/\.\./")
 
 
 def _rds_fast(path: str) -> str:
@@ -175,8 +174,6 @@ def canonicalize_series(url: pd.Series, flags: NF) -> pd.DataFrame:
 
     fast2 = pd.Series([False] * n, dtype="bool")
     if flags == NF.all_greedy() and bool((notnull & ~fast).any()):
-        import re as _re
-
         u2 = url.where(notnull & ~fast, "")
         # one anchored extract doubles as the fullmatch gate (a row is
         # fast2 iff the mandatory host group matched) — the shape regex
@@ -203,7 +200,7 @@ def canonicalize_series(url: pd.Series, flags: NF) -> pd.DataFrame:
             # REMOVE_DIRECTORY_INDEX is anchored at end-of-path with no
             # trailing slash: applied to the RESOLVED path; matching
             # rows take the slow path instead of replicating the rule
-            dir_rx = _re.compile(r"(?:^|/)(?i:index|default)\.\w{1,4}$")
+            dir_rx = re.compile(r"(?:^|/)(?i:index|default)\.\w{1,4}$")
             dir_hit = path2.str.contains(dir_rx, regex=True)
             if bool(dir_hit.any()):
                 demote = fast2.copy()
@@ -263,7 +260,7 @@ def canonicalize_series(url: pd.Series, flags: NF) -> pd.DataFrame:
 
 
 @lru_cache(maxsize=16)
-def make_canonicalize_udf(flags: NF):
+def make_canonicalize_udf(flags: NF, deterministic: bool = True):
     """(url) -> struct(url_norm, host, path, is_robots, is_abs_http).
 
     The single most correctness-critical scalar function (reference:
@@ -273,6 +270,12 @@ def make_canonicalize_udf(flags: NF):
     Cached per flag set: admission re-enters once per WAVE, and every
     uncached call builds (and later pickles/ships) a fresh pandas UDF
     object — pure per-wave driver latency for an identical function.
+
+    ``deterministic=False`` returns a separate instance marked
+    nondeterministic, which Catalyst never copies into a pushed-down
+    filter: a plan that filters on the struct it returns then evaluates
+    it once instead of twice.  (``asNondeterministic`` mutates the UDF
+    it is called on, hence its own cache entry.)
     """
     flags_value = int(flags)
 
@@ -280,7 +283,7 @@ def make_canonicalize_udf(flags: NF):
     def canonicalize(url: pd.Series) -> pd.DataFrame:
         return canonicalize_series(url, NF(flags_value))
 
-    return canonicalize
+    return canonicalize if deterministic else canonicalize.asNondeterministic()
 
 
 LINKS_SCHEMA = ArrayType(StringType())

@@ -225,15 +225,112 @@ class CrawlEngine:
         ]
         return self.spark.createDataFrame(rows, schema=CANDIDATE_DDL)
 
+    def _seed_hosts_df(self, cand: DataFrame) -> DataFrame:
+        """Seed hosts (crawler.go:80-86): normalized hosts of ALL seeds,
+        before any policy filtering.  The canonicalize instance is the
+        nondeterministic one: with the deterministic UDF Catalyst pushes
+        the host filter below the projection and evaluates the UDF twice
+        over every seed."""
+        canon = make_canonicalize_udf(
+            self.opts.url_normalization_flags, deterministic=False
+        )
+        return (
+            cand.withColumn("_c", canon(F.col("url")))
+            .select(F.col("_c.host").alias("seed_host"))
+            .filter(
+                F.col("seed_host").isNotNull() & (F.col("seed_host") != "")
+            )
+            .distinct()
+        )
+
+    def _seed_stage(self, seeds) -> tuple[DataFrame, DataFrame, int, int]:
+        """Build and commit the seed-stage state: (candidates, seed
+        hosts, seed count, seed-host count)."""
+        opts = self.opts
+        if isinstance(seeds, DataFrame):
+            # a DataFrame seed set has no inherent order (a reference
+            # seed LIST goes through the list path below, which keeps
+            # list order).  ord_seq must only be a DETERMINISTIC total
+            # order so "same seed set → same crawl ordering" holds
+            # (north rule) — xxhash64(url) is a pure per-row function:
+            # no global sort, no window, no shuffle.  (The earlier
+            # Window.orderBy(url) formulation was a single-partition
+            # global sort — serial no matter the cluster size.)
+            sd = seeds_df(self.spark, seeds)
+            candidates = sd.select(
+                "url",
+                F.lit(None).cast("string").alias("src_url_norm"),
+                F.lit(None).cast("string").alias("src_host"),
+                "state",
+                F.lit(None).cast("boolean").alias("head_before_get"),
+                F.lit(0).alias("ord_wave"),
+                F.lit("").alias("ord_host"),
+                F.xxhash64(F.col("url")).alias("ord_seq"),
+                F.lit(0).alias("ord_pos"),
+            )
+        else:
+            candidates = self._seed_candidates(seeds)
+        if opts.parallel_checkpoints and not isinstance(seeds, DataFrame):
+            # the two seed-stage commits are independent jobs — overlap
+            # them.  Safe ONLY for list/str seeds: their candidates plan
+            # is built from driver-local data, so both concurrent jobs
+            # evaluate identical rows.  A user-supplied seeds DataFrame
+            # may be non-deterministic (sample(), limit() over an
+            # unordered source, a changing snapshot) — evaluating it
+            # twice could commit a seed_hosts table missing a host that
+            # seed_candidates contains, silently dropping that host's
+            # subtree under same_host_only; those take the serial path
+            # below, which derives seed_hosts from the COMMITTED
+            # candidates.  Serial cost: ~1/4 of a short crawl's fixed
+            # latency, once per run.
+            from concurrent.futures import ThreadPoolExecutor
+
+            _seed_hosts_plan = self._seed_hosts_df(candidates)
+            with ThreadPoolExecutor(2) as pool:
+                f_cand = pool.submit(
+                    self._ckpt_counted, candidates, "seed_candidates", -1
+                )
+                f_hosts = pool.submit(
+                    self._ckpt_counted, _seed_hosts_plan, "seed_hosts", -1
+                )
+                candidates, _n_seeds_meta = f_cand.result()
+                seed_hosts, _n_hosts_meta = f_hosts.result()
+        else:
+            candidates, _n_seeds_meta = self._ckpt_counted(
+                candidates, "seed_candidates", -1
+            )
+            seed_hosts, _n_hosts_meta = self._ckpt_counted(
+                self._seed_hosts_df(candidates), "seed_hosts", -1
+            )
+        # both tables were just durably committed — take the counts
+        # from commit metadata (footers) instead of two count jobs
+        if _n_seeds_meta is not None and _n_hosts_meta is not None:
+            n_seeds, n_seed_hosts = _n_seeds_meta, _n_hosts_meta
+        elif opts.parallel_checkpoints:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(2) as pool:
+                f_ns = pool.submit(candidates.count)
+                f_nh = pool.submit(seed_hosts.count)
+                n_seeds, n_seed_hosts = f_ns.result(), f_nh.result()
+        else:
+            n_seeds = candidates.count()
+            n_seed_hosts = seed_hosts.count()
+        return candidates, seed_hosts, n_seeds, n_seed_hosts
+
     def resume(self, seeds) -> "CrawlResult":
         """Resume a crawl mid-frontier from ``opts.checkpoint_dir``.
 
         Every wave commits (candidates, host_state, seen increments,
         counters manifest); resume reloads the latest commit and
         continues the fixpoint loop — the Iceberg snapshot-rollback
-        analog.  ``seeds`` must be the original seed list (it only
-        rebuilds the seed-host set; admission state comes from the
-        checkpoint).
+        analog.  Loading is pure: the seed hosts and seed counts come
+        from the seed-stage commit, and every table is read back through
+        the store (schema-pinned readers on the parquet store), so no
+        Spark job runs before the first resumed wave.  ``seeds`` no
+        longer rebuilds the seed-host set; it only reaches
+        ``Extender.start``, and is canonicalized again solely for
+        checkpoints that lack the seed tables — pass the original list.
         """
         if self._store is None:
             raise ValueError(
@@ -294,6 +391,12 @@ class CrawlEngine:
                 pend_rows += n if n is not None else 0
             state["bloom_pending_parts"] = pend
             state["bloom_pending_rows"] = pend_rows
+        n_seeds = self._store.rows("seed_candidates", -1)
+        n_seed_hosts = self._store.rows("seed_hosts", -1)
+        if n_seeds is not None and n_seed_hosts is not None:
+            state["seed_hosts"] = self._store.read("seed_hosts", -1)
+            state["n_seeds"] = n_seeds
+            state["n_seed_hosts"] = n_seed_hosts
         return self.run(seeds, resume_state=state)
 
     def run(
@@ -327,41 +430,6 @@ class CrawlEngine:
             seeds = ext.start(seeds)
             c.start = 1
 
-        if isinstance(seeds, DataFrame):
-            # a DataFrame seed set has no inherent order (a reference
-            # seed LIST goes through the list path below, which keeps
-            # list order).  ord_seq must only be a DETERMINISTIC total
-            # order so "same seed set → same crawl ordering" holds
-            # (north rule) — xxhash64(url) is a pure per-row function:
-            # no global sort, no window, no shuffle.  (The earlier
-            # Window.orderBy(url) formulation was a single-partition
-            # global sort — serial no matter the cluster size.)
-            sd = seeds_df(self.spark, seeds)
-            candidates = sd.select(
-                "url",
-                F.lit(None).cast("string").alias("src_url_norm"),
-                F.lit(None).cast("string").alias("src_host"),
-                "state",
-                F.lit(None).cast("boolean").alias("head_before_get"),
-                F.lit(0).alias("ord_wave"),
-                F.lit("").alias("ord_host"),
-                F.xxhash64(F.col("url")).alias("ord_seq"),
-                F.lit(0).alias("ord_pos"),
-            )
-        else:
-            candidates = self._seed_candidates(seeds)
-        def _seed_hosts_df(cand: DataFrame) -> DataFrame:
-            # seed hosts (crawler.go:80-86): normalized hosts of ALL
-            # seeds, before any policy filtering
-            return (
-                cand.withColumn("_c", self._canon(F.col("url")))
-                .select(F.col("_c.host").alias("seed_host"))
-                .filter(
-                    F.col("seed_host").isNotNull() & (F.col("seed_host") != "")
-                )
-                .distinct()
-            )
-
         # the initial_seen commit (mid-frontier mode: can be 10^7+ rows)
         # is independent of every seed-stage table — overlap it with the
         # seed commits instead of serializing a full-table write between
@@ -380,52 +448,16 @@ class CrawlEngine:
                 self._store.commit, initial_seen, "seen_inc", -1
             )
 
-        if opts.parallel_checkpoints and not isinstance(seeds, DataFrame):
-            # the two seed-stage commits are independent jobs — overlap
-            # them.  Safe ONLY for list/str seeds: their candidates plan
-            # is built from driver-local data, so both concurrent jobs
-            # evaluate identical rows.  A user-supplied seeds DataFrame
-            # may be non-deterministic (sample(), limit() over an
-            # unordered source, a changing snapshot) — evaluating it
-            # twice could commit a seed_hosts table missing a host that
-            # seed_candidates contains, silently dropping that host's
-            # subtree under same_host_only; those take the serial path
-            # below, which derives seed_hosts from the COMMITTED
-            # candidates.  Serial cost: ~1/4 of a short crawl's fixed
-            # latency, once per run.
-            from concurrent.futures import ThreadPoolExecutor
-
-            _seed_hosts_plan = _seed_hosts_df(candidates)
-            with ThreadPoolExecutor(2) as pool:
-                f_cand = pool.submit(
-                    self._ckpt_counted, candidates, "seed_candidates", -1
-                )
-                f_hosts = pool.submit(
-                    self._ckpt_counted, _seed_hosts_plan, "seed_hosts", -1
-                )
-                candidates, _n_seeds_meta = f_cand.result()
-                seed_hosts, _n_hosts_meta = f_hosts.result()
+        if resume_state and "seed_hosts" in resume_state:
+            # resume: the seed stage committed both seed tables — load
+            # them (candidates come from the resume state below)
+            seed_hosts = resume_state["seed_hosts"]
+            n_seeds = resume_state["n_seeds"]
+            n_seed_hosts = resume_state["n_seed_hosts"]
         else:
-            candidates, _n_seeds_meta = self._ckpt_counted(
-                candidates, "seed_candidates", -1
+            candidates, seed_hosts, n_seeds, n_seed_hosts = self._seed_stage(
+                seeds
             )
-            seed_hosts, _n_hosts_meta = self._ckpt_counted(
-                _seed_hosts_df(candidates), "seed_hosts", -1
-            )
-        # both tables were just durably committed — take the counts
-        # from commit metadata (footers) instead of two count jobs
-        if _n_seeds_meta is not None and _n_hosts_meta is not None:
-            n_seeds, n_seed_hosts = _n_seeds_meta, _n_hosts_meta
-        elif opts.parallel_checkpoints:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(2) as pool:
-                f_ns = pool.submit(candidates.count)
-                f_nh = pool.submit(seed_hosts.count)
-                n_seeds, n_seed_hosts = f_ns.result(), f_nh.result()
-        else:
-            n_seeds = candidates.count()
-            n_seed_hosts = seed_hosts.count()
         # init trace lines (crawler.go:90-91)
         self._log(LogFlags.TRACE, f"init() - seeds length: {n_seeds}")
         self._log(LogFlags.TRACE, f"init() - host count: {n_seed_hosts}")

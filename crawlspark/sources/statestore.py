@@ -27,13 +27,45 @@ Mapping (parquet analog → Iceberg):
 | seen snapshot compaction | one `seen_snapshot` dir replacing inc dirs | `rewrite_data_files` / `MERGE INTO` the compacted snapshot |
 | MANIFEST.json resume pointer | driver-side JSON | table snapshot ids (`.history()`), `VERSION AS OF` reads |
 | row-count fixpoint check | parquet footer scan | `SELECT count(*) ... VERSION AS OF` (metadata-only in Iceberg) |
+| table schema for read-back | `_schema.json` inside each committed dir, replaced with it | table metadata (schema is part of every snapshot) |
+
+The parquet store's schema record lets ``commit()`` and ``read()``
+return ``spark.read.schema(...)`` readers: Spark then skips the
+one-task footer-inference job it would otherwise run for every read.
+The record lives inside the table directory, so an overwrite of the
+directory (by the store or by hand) removes it together with the data
+it describes; a directory without one is read with inference, as
+checkpoints written before the record existed are.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+#: per-table schema record; the leading underscore hides it from the
+#: parquet readers (Spark and pyarrow both skip ``_``-prefixed files)
+SCHEMA_FILE = "_schema.json"
+
+
+def _write_atomic(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` via a temp file and ``os.replace``: a
+    reader sees the previous content or the new one, never a partial
+    write."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as fh:
+            fh.write(text)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 class StateStore:
@@ -75,10 +107,19 @@ class ParquetStateStore(StateStore):
     def commit(self, df: DataFrame, name: str, wave: int) -> DataFrame:
         path = self._path(name, wave)
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        # written after the data: a crash in between leaves a directory
+        # without a record, which read() infers like an older checkpoint
+        _write_atomic(os.path.join(path, SCHEMA_FILE), df.schema.json())
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def read(self, name: str, wave: int) -> DataFrame:
-        return self.spark.read.parquet(self._path(name, wave))
+        path = self._path(name, wave)
+        try:
+            with open(os.path.join(path, SCHEMA_FILE)) as fh:
+                schema = StructType.fromJson(json.load(fh))
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     def rows(self, name: str, wave: int) -> int | None:
         try:
@@ -91,14 +132,11 @@ class ParquetStateStore(StateStore):
             return None
 
     def put_manifest(self, manifest: dict) -> None:
-        import json
-
-        with open(os.path.join(self.root, "MANIFEST.json"), "w") as fh:
-            json.dump(manifest, fh)
+        _write_atomic(
+            os.path.join(self.root, "MANIFEST.json"), json.dumps(manifest)
+        )
 
     def get_manifest(self) -> dict:
-        import json
-
         with open(os.path.join(self.root, "MANIFEST.json")) as fh:
             return json.load(fh)
 
@@ -192,14 +230,10 @@ class IcebergStateStore(StateStore):
             return None
 
     def put_manifest(self, manifest: dict) -> None:
-        import json
-
         self.spark.createDataFrame(
             [(json.dumps(manifest),)], "manifest_json string"
         ).writeTo(self._table("manifest")).createOrReplace()
 
     def get_manifest(self) -> dict:
-        import json
-
         row = self.spark.table(self._table("manifest")).collect()[0]
         return json.loads(row["manifest_json"])

@@ -1,3 +1,5 @@
+from contextlib import contextmanager
+
 import pytest
 
 
@@ -23,3 +25,34 @@ def fixture_pages(spark):
     df = fixture_pages_df(spark).cache()
     df.count()
     return PagesSource(df)
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` collects the Spark jobs submitted
+    inside the block.
+
+    ``jobs`` is filled on exit with one ``"job N: <stage names>"`` entry
+    per job, read from ``statusTracker``.  Counts the jobs that carry no
+    job group, as every job the engine submits does.
+    """
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids() -> set[int]:
+        # the status store is fed asynchronously by the listener bus:
+        # drain it so every job submitted so far is visible
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup())
+
+    @contextmanager
+    def count():
+        before = job_ids()
+        jobs: list[str] = []
+        yield jobs
+        for jid in sorted(job_ids() - before):
+            info = tracker.getJobInfo(jid)
+            stages = [tracker.getStageInfo(s) for s in (info.stageIds if info else [])]
+            jobs.append(f"job {jid}: " + ", ".join(s.name for s in stages if s))
+
+    return count

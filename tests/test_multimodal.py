@@ -123,3 +123,45 @@ def test_encoder_array_paths_byte_identical():
             for f in range(nf)
         ]
         assert encode_cvid(w, h, 10, fns) == encode_cvid(w, h, 10, arrs), mid
+
+
+def test_encode_wav_rejects_out_of_range_on_both_paths():
+    # an out-of-range sample raises the same struct.error whether the
+    # samples come as an iterable or as an ndarray (no silent int16 wrap)
+    import struct
+
+    import numpy as np
+
+    for bad in ([0, 32768], [-32769, 5], [1.5]):
+        errors = []
+        for samples in (bad, np.asarray(bad)):
+            with pytest.raises(struct.error) as exc:
+                encode_wav(samples, 8000)
+            errors.append(str(exc.value))
+        assert errors[0] == errors[1], bad
+    edge = [-32768, 0, 32767]
+    assert encode_wav(edge, 8000) == encode_wav(np.asarray(edge), 8000)
+
+
+def test_synthesize_blob_bigint_ids_match_python_ints():
+    # ids near the bigint maximum give the bytes of the arbitrary-
+    # precision per-element formulas (no int64 overflow in the arrays)
+    top = 2**63 - 1
+    for mid in [top, top - 1, top - 2, 2**62 + 5, -top]:
+        p = _media_params(mid)
+        if p["kind"] == "image":
+            want = encode_bmp(p["w"], p["h"], lambda i: (mid * 31 + i * 7) % 256)
+        elif p["kind"] == "audio":
+            want = encode_wav(
+                [((mid * 7 + i * 13) % 65536) - 32768 for i in range(p["n"])],
+                p["rate"],
+            )
+        else:
+            want = encode_cvid(
+                p["w"], p["h"], p["fps"],
+                [
+                    (lambda f: lambda i: (mid * 17 + f * 101 + i * 3) % 256)(f)
+                    for f in range(p["nframes"])
+                ],
+            )
+        assert synthesize_media_blob(mid) == (p["kind"], want), mid
