@@ -1,3 +1,4 @@
+import os
 from contextlib import contextmanager
 
 import pytest
@@ -11,7 +12,23 @@ def spark():
         app_name="crawlspark-tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={"spark.sql.files.maxPartitionBytes": "16m"},
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": "16m",
+            # One JVM serves the whole session.  With the engine's 24g
+            # default heap G1 grows it past the RAM of a 16 GB host and
+            # the kernel kills the JVM partway through the suite; a
+            # bounded heap garbage-collects instead.
+            "spark.driver.memory": os.environ.get(
+                "CRAWLSPARK_DRIVER_MEM", "6g"
+            ),
+            # The status store keeps the plan graph and description of
+            # the last 1000 SQL executions by default, and wave plans
+            # are large: keep few.  Keep enough jobs for `spark_jobs`
+            # blocks.
+            "spark.sql.ui.retainedExecutions": "20",
+            "spark.ui.retainedJobs": "200",
+            "spark.ui.retainedStages": "200",
+        },
     )
     yield s
     s.stop()
