@@ -416,7 +416,6 @@ def _crawl_once(spark, pages_path: str) -> dict:
         same_host_only=False,
         max_waves=BENCH_DEEP or BENCH_WAVES,
         collect_logs=False,  # throughput mode: counters stay exact
-        parallel_checkpoints=True,  # overlap end-of-wave commits + stats
         checkpoint_dir=ck_dir,
         # bloom mode: the north rule's named structure — (pid, bitmap)
         # shard table, pure-JVM broadcast-join probe; counters are

@@ -98,9 +98,6 @@ FLAGS_USUALLY_SAFE_NON_GREEDY = NormalizationFlags.usually_safe_non_greedy()
 FLAGS_UNSAFE_GREEDY = NormalizationFlags.unsafe_greedy()
 FLAGS_ALL_GREEDY = NormalizationFlags.all_greedy()
 
-DEFAULT_USER_AGENT = (
-    "Mozilla/5.0 (Windows NT 6.1; rv:15.0) Gecko/20120716 Firefox/15.0a2"
-)
 DEFAULT_ROBOT_USER_AGENT = "Googlebot (gocrawl v0.4)"
 
 
@@ -130,9 +127,16 @@ class Options:
     wave-count eviction horizon, the batch-iterative analog: a host
     whose state has been inactive for more than this many waves is
     evicted from ``host_state`` (robots re-fetched on reappearance).
+
+    Only values that callers set differently are options.  Fixed engine
+    policy lives next to the code that applies it: the Bloom engage
+    ratio is ``plans.engine.BLOOM_ENGAGE_SEEN_PER_WAVE_RATIO``, the
+    salted-sequencing bucket count is the skew operators' default
+    (2 × ``defaultParallelism``), the end-of-wave commits always
+    overlap, and the session's shuffle partitions are set by
+    ``session.get_spark``.
     """
 
-    user_agent: str = DEFAULT_USER_AGENT
     robot_user_agent: str = DEFAULT_ROBOT_USER_AGENT
     max_visits: int = 0  # 0 = unlimited (crawler.go:303-309)
     crawl_delay_ms: int = 5000  # DefaultCrawlDelay = 5s (options.go:15)
@@ -143,7 +147,6 @@ class Options:
         default_factory=NormalizationFlags.all_greedy
     )
     # engine knobs (no reference analog — Spark-scale machinery)
-    shuffle_partitions: int = 32
     # politeness budget / hot-host backpressure (SURVEY §4 P11, §2.10):
     # at most this many URLs fetched per host per wave (0 = unlimited);
     # the overflow defers to the next wave without re-admission — the
@@ -174,7 +177,6 @@ class Options:
     # scan is skipped outright when commit metadata already bounds the
     # wave below the threshold.
     salt_hot_hosts: bool = False
-    salt_buckets: int = 0  # 0 → defaultParallelism * 2
     # Residual exposure (documented, ADVICE r5): hot detection reads the
     # PREVIOUS wave's per-host batch sizes, so a host that jumps from
     # ~0 to far beyond this threshold within ONE wave sorts its whole
@@ -197,31 +199,13 @@ class Options:
     # pass over the full seen set when it crosses.  0 = engage at run
     # start (small-fixture tests exercise the bloom path directly);
     # -1 (the DEFAULT) = derive the threshold from the measured
-    # crossover as a seen/wave RATIO: engage once the metadata-tracked
-    # seen set reaches bloom_engage_seen_per_wave_ratio × the current
-    # wave's candidate bound.  The official A/B record behind the
-    # ratio (BENCH_r05/BASELINE.md): at 16M seen vs a 200k-row wave
-    # (80×) bloom is a tie-to-loss across sessions; at 32M vs 100k
-    # (320×) it wins decisively (1.94× official) — so the default
-    # engages at 160×, between the measured tie and the measured win.
-    # The threshold only acts when the engine can know the seen row
-    # count from commit metadata (durable store); otherwise the bloom
-    # engages immediately — dormancy must never risk a stale filter.
-    # Caller-prebuilt initial_bloom / resumed shards always engage.
+    # crossover as a seen/wave RATIO (engine.BLOOM_ENGAGE_SEEN_PER_WAVE_RATIO
+    # × the current wave's candidate bound).  The threshold only acts
+    # when the engine knows the seen row count from commit metadata
+    # (durable store); otherwise the bloom engages immediately —
+    # dormancy must never risk a stale filter.  Caller-prebuilt
+    # initial_bloom / resumed shards always engage.
     bloom_min_seen_rows: int = -1
-    bloom_engage_seen_per_wave_ratio: int = 160
-    # plain exact-probe join strategy below the bloom crossover: when
-    # commit metadata bounds the seen table at or under this many rows,
-    # hint a broadcast of the seen side (broadcast-hash left join, no
-    # exchange of either side).  DEFAULT OFF: a controlled deep-arm A/B
-    # (10 waves, seen growing 50k→566k) measured the hint 34% SLOWER
-    # end-to-end (152.8s vs 114.1s) — re-collecting and re-broadcasting
-    # a growing seen table every wave costs more than the AQE shuffle
-    # join it replaces, and the fitted marginal per-fetch cost of the
-    # shuffle path is already flat in seen size (33us/fetch early AND
-    # late).  Kept as an opt-in for cluster topologies where driver
-    # bandwidth is cheaper than a cross-node exchange.
-    broadcast_seen_max_rows: int = 0
     # probe strategy: "join" broadcasts the shard words and bit-tests
     # in pure JVM expressions (no Python, no candidate shuffle — the
     # fast path while the filter fits a broadcast); "cogroup" keeps
@@ -236,6 +220,6 @@ class Options:
     max_waves: int = 1000  # safety stop for the fixpoint loop
     collect_logs: bool = True  # False: skip visit/fetch/error logs
     # (counters stay exact) — the throughput configuration
-    parallel_checkpoints: bool = False  # overlap end-of-wave state
-    # commits via concurrent driver threads (Spark job-level parallelism;
-    # per-partition cache locks prevent duplicate compute)
+    # read by nothing: the end-of-wave commits always overlap.  Kept
+    # only so existing callers that still pass it keep working.
+    parallel_checkpoints: bool = False

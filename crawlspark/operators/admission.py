@@ -60,7 +60,6 @@ def admit_candidates(
     bloom_words: DataFrame | None = None,
     bloom_pending: DataFrame | None = None,
     rows_bound: int | None = None,
-    seen_rows: int | None = None,
 ) -> DataFrame:
     """Annotate candidates with canonical columns + admission verdicts.
 
@@ -180,22 +179,6 @@ def admit_candidates(
             .drop("_seen_url", "maybe_seen", "_pend")
         )
     else:
-        # below the bloom crossover the exact join IS the probe — and a
-        # shuffled join exchanges candidates AND the whole seen table
-        # every wave, a cost that grows with crawl depth even when wave
-        # size is flat (the measured deep-arm per-fetch creep, VERDICT
-        # r4 item 3).  When commit metadata bounds the seen side small
-        # enough, broadcast it: no exchange of either side, per-wave
-        # probe cost ~ O(wave + seen-scan).  Catalyst can't pick this
-        # itself because the seen union's size estimate exceeds the
-        # conservative autoBroadcast threshold long before the table is
-        # actually too big to broadcast.
-        if (
-            seen_rows is not None
-            and opts.broadcast_seen_max_rows > 0
-            and seen_rows <= opts.broadcast_seen_max_rows
-        ):
-            seen_side = F.broadcast(seen_side)
         df = df.join(
             seen_side, df["url_norm"] == F.col("_seen_url"), "left"
         ).drop("_seen_url")

@@ -83,7 +83,6 @@ def politeness_schedule(
             value_col="delay_ms",
             ord_cols=ord_all,
             hot_hosts=hot_hosts or [],
-            num_buckets=opts.salt_buckets or None,
             seq_col="seq_in_wave",
             cumsum_col="_cum_excl",
         )

@@ -578,16 +578,6 @@ class TestCrawlDelayGrowth:
         assert len(set(scheds)) == len(scheds) or scheds[0] == 0
 
 
-def test_parallel_checkpoints_same_result(spark, fixture_pages):
-    """Concurrent end-of-wave state commits preserve exact results."""
-    res = crawl(
-        spark, fixture_pages, ["http://hosta/page1.html"],
-        Options(crawl_delay_ms=DELAY, parallel_checkpoints=True),
-    )
-    assert res.counters.visit == 3
-    assert res.counters.filter == 10
-
-
 # ---------------------------------------------------------- log surface ----
 
 class TestLogSurface:
@@ -745,7 +735,7 @@ class TestFetchHooks:
 
 def test_all_scale_options_compose(spark, fixture_pages, tmp_path):
     """Every scale knob at once (bloom sidecar + salted sequencing +
-    seen compaction + parallel durable commits) produces the exact
+    seen compaction + durable commits) produces the exact
     baseline crawl: counters, seen set, per-host visit order."""
     seeds = ["http://hosta/page1.html", "http://hosta/page4.html"]
     base = crawl(spark, fixture_pages, seeds)
@@ -760,7 +750,6 @@ def test_all_scale_options_compose(spark, fixture_pages, tmp_path):
             salt_hot_hosts=True,
             salt_threshold_rows=1,  # force the salted path at fixture scale
             seen_compact_every=2,
-            parallel_checkpoints=True,
             checkpoint_dir=str(tmp_path / "ck"),
         ),
     ).run(seeds)

@@ -2,15 +2,18 @@
 state and every table back through schema-pinned readers, so it submits
 no Spark job before its first wave."""
 
+import glob
 import json
 import os
 import shutil
+from dataclasses import asdict, dataclass
 
 import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.config import Options
-from crawlspark.plans.engine import CrawlEngine
+from crawlspark.plans.engine import CrawlEngine, WaveState
+from crawlspark.plans.extender import Counters
 from crawlspark.sources.statestore import SCHEMA_FILE, ParquetStateStore
 
 SEEDS = [
@@ -51,8 +54,13 @@ def _resumer(spark, pages, src, dst):
     )
 
 
+@pytest.mark.parametrize(
+    "sidecar, min_seen_rows",
+    [("engaged", 0), ("dormant", 10**9)],
+    ids=["engaged", "dormant"],
+)
 def test_resume_submits_no_job_at_wave_limit(
-    spark, fixture_pages, spark_jobs, tmp_path
+    spark, fixture_pages, spark_jobs, tmp_path, sidecar, min_seen_rows
 ):
     # the mid-frontier shape: a committed initial seen set, a Bloom
     # sidecar and a politeness-deferred frontier all come back on resume
@@ -66,7 +74,7 @@ def test_resume_submits_no_job_at_wave_limit(
         max_waves=1,
         max_urls_per_host_per_wave=1,
         use_bloom_seen=True,
-        bloom_min_seen_rows=0,
+        bloom_min_seen_rows=min_seen_rows,
         bloom_partitions=2,
         bloom_expected_per_partition=1000,
     )
@@ -74,7 +82,7 @@ def test_resume_submits_no_job_at_wave_limit(
         SEEDS, initial_seen=initial
     )
     manifest = ParquetStateStore(spark, opts.checkpoint_dir).get_manifest()
-    assert manifest["bloom_fold_wave"] is not None
+    assert (manifest["bloom_fold_wave"] is not None) == (sidecar == "engaged")
     assert manifest["has_initial_seen"]
 
     engine = CrawlEngine(spark, fixture_pages, opts)
@@ -85,6 +93,10 @@ def test_resume_submits_no_job_at_wave_limit(
     assert vars(res.counters) == vars(part.counters)
     assert (res.n_seeds, res.n_seed_hosts) == (part.n_seeds, part.n_seed_hosts)
     assert _seen_set(res) == _seen_set(part)
+    if sidecar == "dormant":
+        # a still-dormant sidecar stays dormant: nothing built, nothing
+        # committed
+        assert glob.glob(os.path.join(opts.checkpoint_dir, "*", "bloom")) == []
 
 
 def test_resume_with_reordered_seeds(
@@ -176,3 +188,91 @@ def test_manifest_write_is_atomic(spark, tmp_path, monkeypatch):
 
     assert store.get_manifest() == {"wave": 1}
     assert os.listdir(store.root) == ["MANIFEST.json"]
+
+
+# -- WaveState manifest round trip (no Spark) --------------------------
+
+
+@dataclass(frozen=True)
+class _Table:
+    """Stands in for a table the store reads back."""
+
+    name: str
+    wave: int
+    columns: tuple = ("host", "last_wave_rows")
+
+
+class _FakeStore:
+    def __init__(self, manifest):
+        self.manifest = manifest
+        self.reads = set()
+
+    def get_manifest(self):
+        return self.manifest
+
+    def read(self, name, wave):
+        self.reads.add((name, wave))
+        return _Table(name, wave)
+
+    def rows(self, name, wave):
+        return 7
+
+
+def _manifest(**parts):
+    return {
+        "wave": 3,
+        "seen_snapshot_wave": None,
+        "seen_rows": 40,
+        "deferred_rows": 0,
+        "has_initial_seen": False,
+        "bloom_fold_wave": None,
+        "visits_total": 5,
+        "counters": asdict(Counters(visit=5, errors_by_kind={"fetch": 2})),
+        **parts,
+    }
+
+
+BASE_READS = {
+    ("seen_inc", 0), ("seen_inc", 1), ("seen_inc", 2), ("host_state", 2),
+    ("candidates", 2), ("seed_hosts", -1),
+}
+
+
+@pytest.mark.parametrize(
+    "parts, reads",
+    [
+        ({}, BASE_READS),
+        ({"deferred_rows": 4}, BASE_READS | {("deferred", 2)}),
+        ({"bloom_fold_wave": 0}, BASE_READS | {("bloom", 0)}),
+        (
+            {"seen_snapshot_wave": 1},
+            BASE_READS - {("seen_inc", 0), ("seen_inc", 1)}
+            | {("seen_snapshot", 1)},
+        ),
+        ({"has_initial_seen": True}, BASE_READS | {("seen_inc", -1)}),
+        (
+            {"seen_rows": None, "deferred_rows": None},
+            BASE_READS | {("deferred", 2)},
+        ),
+    ],
+    ids=["plain", "deferred", "bloom_fold", "seen_snapshot", "initial_seen",
+         "unknown_counts"],
+)
+def test_wave_state_manifest_round_trip(parts, reads):
+    manifest = _manifest(**parts)
+    store = _FakeStore(manifest)
+    state = WaveState.load(store, use_bloom=True)
+    assert state.manifest() == manifest
+    assert store.reads == reads
+
+
+def test_parent_manifest_still_loads():
+    # a manifest as written before the seen row count was recorded
+    manifest = _manifest(bloom_fold_wave=-1, has_initial_seen=True)
+    del manifest["seen_rows"]
+    state = WaveState.load(_FakeStore(manifest), use_bloom=True)
+    # unknown seen count: the Bloom gate engages, as before
+    assert state.seen_rows is None
+    assert state.bloom_pending_parts == [_Table("seen_inc", w) for w in range(3)]
+    assert state.bloom_pending_rows == 21
+    assert state.manifest() == {**manifest, "seen_rows": None}

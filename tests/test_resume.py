@@ -7,6 +7,10 @@ from crawlspark.config import Options
 from crawlspark.plans.engine import CrawlEngine
 
 
+def _visit_order(res):
+    return [r[0] for r in res.visit_log.orderBy("seq").select("url_norm").collect()]
+
+
 def _seen_set(res):
     return {r[0] for r in res.seen.select("url_norm").collect()}
 
@@ -116,3 +120,61 @@ def test_resume_from_pre_round5_host_state(spark, fixture_pages, tmp_path):
     assert _seen_set(resumed) == _seen_set(full)
     # the resumed run's commits repopulate the statistic
     assert "last_wave_rows" in resumed.host_state.columns
+
+
+class TestResumeDeferred:
+    def test_resume_restores_deferred_frontier(self, spark, fixture_pages, tmp_path):
+        """Interrupt while the politeness cap is holding deferred URLs;
+        resume must crawl them (they are in neither candidates nor
+        re-admittable seen)."""
+        opts = dict(crawl_delay_ms=100, max_urls_per_host_per_wave=1)
+        full = CrawlEngine(spark, fixture_pages, Options(**opts)).run(
+            ["http://hosta/page1.html"]
+        )
+        assert full.counters.visit == 3
+
+        ckdir = str(tmp_path / "ck")
+        part = CrawlEngine(
+            spark, fixture_pages,
+            Options(**opts, checkpoint_dir=ckdir, max_waves=2),
+        ).run(["http://hosta/page1.html"])
+        # with cap=1, wave1 visits page1, wave2 visits page2 and DEFERS
+        # page3's sibling links beyond the cap
+        assert part.counters.visit < full.counters.visit
+
+        resumed = CrawlEngine(
+            spark, fixture_pages, Options(**opts, checkpoint_dir=ckdir)
+        ).resume(["http://hosta/page1.html"])
+        assert resumed.counters.visit == full.counters.visit
+        assert _visit_order(resumed) == _visit_order(full)[-len(
+            _visit_order(resumed)
+        ):]
+        # seen sets identical
+        assert {r[0] for r in resumed.seen.select("url_norm").collect()} == {
+            r[0] for r in full.seen.select("url_norm").collect()
+        }
+
+
+class TestResumeInitialSeen:
+    def test_initial_seen_survives_resume(self, spark, fixture_pages, tmp_path):
+        """run(initial_seen=...) + crash + resume: the pre-populated
+        seen set must persist — page2 pre-seen means page2 is never
+        visited, before OR after the resume point."""
+        initial = spark.createDataFrame(
+            [("http://hosta/page2.html", "hosta", -1)],
+            "url_norm string, host string, wave_added int",
+        )
+        ckdir = str(tmp_path / "ck")
+        part = CrawlEngine(
+            spark, fixture_pages,
+            Options(crawl_delay_ms=100, checkpoint_dir=ckdir, max_waves=1),
+        ).run(["http://hosta/page1.html"], initial_seen=initial)
+        assert part.waves == 1
+
+        resumed = CrawlEngine(
+            spark, fixture_pages, Options(crawl_delay_ms=100, checkpoint_dir=ckdir)
+        ).resume(["http://hosta/page1.html"])
+        visited = set(_visit_order(part)) | set(_visit_order(resumed))
+        assert "http://hosta/page2.html" not in visited
+        seen = {r[0] for r in resumed.seen.select("url_norm").collect()}
+        assert "http://hosta/page2.html" in seen

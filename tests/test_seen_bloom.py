@@ -1,8 +1,12 @@
 """Bloom seen-filter sidecar: no false negatives, bounded false
 positives, shard merge correctness."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
+from crawlspark.config import Options
 from crawlspark.operators.seen import (
     apply_bloom,
     bloom_params,
@@ -10,6 +14,13 @@ from crawlspark.operators.seen import (
     collect_shards,
     merge_blooms,
 )
+from crawlspark.plans.engine import CrawlEngine
+
+BLOOM_KW = dict(num_partitions=4, expected_per_partition=1000, fpp=0.01)
+
+
+def _visit_order(res):
+    return [r[0] for r in res.visit_log.orderBy("seq").select("url_norm").collect()]
 
 
 def test_bloom_params_sane():
@@ -414,3 +425,185 @@ def test_bloom_default_ratio_gate(spark, fixture_pages, tmp_path):
     ).run(seeds, initial_seen=big_seen)
     assert eng2.counters.visit == engaged.counters.visit == 5
     assert glob.glob(os.path.join(ck2, "*", "bloom")) != []
+
+
+class TestBloomNullHashes:
+    """xxhash64(NULL) is NULL; every probe path must report
+    maybe_seen=False for null url_norm (matching the JVM join path's
+    CASE WHEN) instead of crashing in the int64 conversion."""
+
+    @pytest.fixture(scope="class")
+    def seen_and_cands(self, spark):
+        seen = spark.createDataFrame(
+            [(f"http://h{i}/p", f"h{i}", 0) for i in range(50)],
+            "url_norm string, host string, wave_added int",
+        )
+        cands = spark.createDataFrame(
+            [("http://h1/p",), ("http://new/x",), (None,), (None,)],
+            "url_norm string",
+        )
+        return seen, cands
+
+    def _check(self, rows):
+        by_url = {}
+        nulls = []
+        for r in rows:
+            if r["url_norm"] is None:
+                nulls.append(r["maybe_seen"])
+            else:
+                by_url[r["url_norm"]] = r["maybe_seen"]
+        assert by_url["http://h1/p"] is True  # no false negatives
+        assert nulls == [False, False]  # null key → definitely unseen
+        return by_url
+
+    def test_cogroup_probe(self, spark, seen_and_cands):
+        from crawlspark.operators.seen import apply_bloom_df, build_bloom
+
+        seen, cands = seen_and_cands
+        shards = build_bloom(seen, num_partitions=4)
+        self._check(apply_bloom_df(cands, shards, num_partitions=4).collect())
+
+    def test_collected_shard_probe(self, spark, seen_and_cands):
+        from crawlspark.operators.seen import (
+            apply_bloom, build_bloom, collect_shards,
+        )
+
+        seen, cands = seen_and_cands
+        shards = collect_shards(build_bloom(seen, num_partitions=4))
+        self._check(apply_bloom(cands, shards, num_partitions=4).collect())
+
+    def test_join_probe(self, spark, seen_and_cands):
+        from crawlspark.operators.seen import apply_bloom_join, build_bloom
+
+        seen, cands = seen_and_cands
+        shards = build_bloom(seen, num_partitions=4)
+        self._check(apply_bloom_join(cands, shards, num_partitions=4).collect())
+
+    def test_engine_cogroup_with_unparsable_link(self, spark, tmp_path):
+        """A crawl whose pages harvest an unparsable URL (null url_norm
+        after canonicalization) must not crash in cogroup bloom mode."""
+        from crawlspark.fixtures import fixture_pages_df
+        from crawlspark.sources.pages import PagesSource
+
+        pages = fixture_pages_df(spark)
+        # graft a busted link onto page1's html
+        bad = b'<a href="http://[bad-bracket/oops">x</a>'
+        pages = pages.withColumn(
+            "html",
+            F.when(
+                F.col("url") == "http://hosta/page1.html",
+                F.concat(F.col("html"), F.lit(bad)),
+            ).otherwise(F.col("html")),
+        )
+        res = CrawlEngine(
+            spark,
+            PagesSource(pages),
+            Options(
+                crawl_delay_ms=1,
+                use_bloom_seen=True, bloom_min_seen_rows=0,
+                bloom_probe="cogroup",
+                bloom_partitions=4,
+            ),
+        ).run(["http://hosta/page1.html"])
+        assert res.counters.visit == 3
+
+
+class TestBloomLazyFold:
+    """The engine folds seen increments into the bitmaps lazily (pending
+    increments are probed exactly via broadcast meanwhile).  Every fold
+    policy must produce identical counters and visit order to the
+    bloom-off crawl — and the never-fold case must not commit any
+    per-wave bloom state."""
+
+    def _crawl(self, spark, fixture_pages, ck, **opt_kw):
+        res = CrawlEngine(
+            spark,
+            fixture_pages,
+            Options(crawl_delay_ms=100, checkpoint_dir=ck, **opt_kw),
+        ).run(["http://hosta/page1.html", "http://hostb/page1.html"])
+        return res
+
+    def test_fold_policies_match_plain(self, spark, fixture_pages, tmp_path):
+        base = self._crawl(spark, fixture_pages, str(tmp_path / "p"))
+        lazy = self._crawl(
+            spark, fixture_pages, str(tmp_path / "l"),
+            use_bloom_seen=True, bloom_min_seen_rows=0, bloom_partitions=4,
+            bloom_expected_per_partition=1000,
+            bloom_fold_min_rows=10_000,  # never folds at fixture scale
+        )
+        eager = self._crawl(
+            spark, fixture_pages, str(tmp_path / "e"),
+            use_bloom_seen=True, bloom_min_seen_rows=0, bloom_partitions=4,
+            bloom_expected_per_partition=1000,
+            bloom_fold_min_rows=1,  # folds after every wave
+        )
+        for res in (lazy, eager):
+            assert vars(res.counters) == vars(base.counters)
+            assert _visit_order(res) == _visit_order(base)
+        # never-fold: only the seed-stage bloom commit exists — no
+        # per-wave bloom maintenance jobs ran
+        lazy_root = str(tmp_path / "l")
+        assert os.path.exists(os.path.join(lazy_root, "seed", "bloom"))
+        for w in range(lazy.waves):
+            assert not os.path.exists(
+                os.path.join(lazy_root, f"wave={w}", "bloom")
+            )
+        # eager: every wave with a nonempty increment re-committed shards
+        eager_root = str(tmp_path / "e")
+        assert any(
+            os.path.exists(os.path.join(eager_root, f"wave={w}", "bloom"))
+            for w in range(eager.waves)
+        )
+
+
+# Bloom probe int64 exactness: a nullable hash column converts to
+# float64 pandas-side whenever an Arrow batch contains a null, so valid
+# rows' 64-bit hashes would lose low bits and probe the wrong bits.
+# coalesce(1) forces every row into ONE batch.
+class TestBloomNullBatchPrecision:
+    @pytest.fixture(scope="class")
+    def seen_cands_shards(self, spark):
+        from crawlspark.operators.seen import build_bloom
+
+        seen = spark.createDataFrame(
+            [(f"http://host{i}.example/path/{i}",) for i in range(200)],
+            "url_norm string",
+        )
+        # every row — all 200 seen URLs plus a null — in ONE partition,
+        # hence one Arrow batch (maxRecordsPerBatch default is 10k)
+        cands = seen.unionByName(
+            spark.createDataFrame([(None,)], "url_norm string")
+        ).coalesce(1)
+        shards = build_bloom(seen, **BLOOM_KW)
+        return seen, cands, shards
+
+    def _check(self, rows):
+        seen_flags = [r["maybe_seen"] for r in rows if r["url_norm"] is not None]
+        null_flags = [r["maybe_seen"] for r in rows if r["url_norm"] is None]
+        assert len(seen_flags) == 200 and len(null_flags) == 1
+        # NO false negatives — every seen URL must test "maybe" even
+        # sharing its Arrow batch with a null-key row
+        assert all(seen_flags)
+        assert null_flags == [False]
+
+    def test_collected_shard_probe(self, spark, seen_cands_shards):
+        from crawlspark.operators.seen import apply_bloom, collect_shards
+
+        _, cands, shards = seen_cands_shards
+        self._check(
+            apply_bloom(cands, collect_shards(shards), **BLOOM_KW).collect()
+        )
+
+    def test_cogroup_probe(self, spark, seen_cands_shards):
+        # null rows now hash to a REAL pid (non-null coalesced hashes),
+        # so they share a cogroup with valid rows — same exactness bar
+        from crawlspark.operators.seen import apply_bloom_df
+
+        _, cands, shards = seen_cands_shards
+        self._check(apply_bloom_df(cands, shards, **BLOOM_KW).collect())
+
+    def test_join_probe(self, spark, seen_cands_shards):
+        from crawlspark.operators.seen import apply_bloom_join
+
+        _, cands, shards = seen_cands_shards
+        self._check(apply_bloom_join(cands, shards, **BLOOM_KW).collect())

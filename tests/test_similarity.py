@@ -1,51 +1,7 @@
-"""Round-6 optimization pins: each rewritten operator internal must be
-equivalent to its pre-optimization formulation on adversarial inputs
-(the oracle tests cover the fixture corpus; these cover the edge shapes
-the rewrite could plausibly diverge on)."""
+"""Similarity operators (operators/similarity.py): the bucket-local
+block matmul must equal the per-pair join formulation it replaced."""
 
 from pyspark.sql import functions as F
-
-
-def _docs(spark, texts):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-
-
-EDGE_TEXTS = [
-    "",  # no shingles
-    "one",  # < n words
-    "one two",  # still < n
-    "a b c",  # exactly one shingle
-    "a b c d e f g",  # normal
-    "x x x x x x",  # repeated shingles (multiset vs set)
-    "Ünï çôdé ÛNÏ ÇÔDÉ mixed Case words here",  # unicode + case
-    "a  b   c d",  # empty tokens from repeated spaces
-    " leading and trailing ",  # boundary tokens
-    "z y x w v u t s r q p o n m l k j i h g f e d c b a",
-]
-
-
-def test_minhash_array_form_matches_explode_groupby(spark):
-    """minhash_signatures (per-row array_min fold) must be row-identical
-    to the explode+groupBy(min) formulation it replaced."""
-    from crawlspark.operators.textops import _shingles, minhash_signatures
-
-    docs = _docs(spark, EDGE_TEXTS * 3)
-    new = minhash_signatures(docs)
-
-    sh = docs.select(
-        "doc_id", F.explode(_shingles("text", 3)).alias("shingle")
-    )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{k}|"), F.col("shingle")))).alias(f"sig_{k}")
-        for k in range(4)
-    ]
-    ref = sh.groupBy("doc_id").agg(*aggs)
-
-    got = {tuple(r) for r in new.collect()}
-    want = {tuple(r) for r in ref.collect()}
-    assert got == want
 
 
 def test_lsh_matmul_matches_pairwise_join_form(spark):
@@ -107,18 +63,3 @@ def test_lsh_matmul_matches_pairwise_join_form(spark):
         )
     }
     assert new == ref and len(new) > 0
-
-
-def test_fan_out_is_conditional(spark):
-    """fan_out only repartitions when the input carries fewer
-    partitions than the executor parallelism — identity otherwise (at
-    scale a multi-split table must NOT gain a corpus-wide shuffle)."""
-    from crawlspark.util import fan_out
-
-    p = spark.sparkContext.defaultParallelism
-    narrow = spark.createDataFrame([(1,)], "x int").coalesce(1)
-    assert fan_out(narrow).rdd.getNumPartitions() == p
-
-    wide = spark.range(0, 1000, 1, p + 4)
-    out = fan_out(wide.toDF("x"))
-    assert out.rdd.getNumPartitions() == p + 4  # untouched
