@@ -441,13 +441,6 @@ def _crawl_once(spark, pages_path: str) -> dict:
         # constant-size waves for the deep arm (see DEEP_HOST_CAP): the
         # flat-tail ratio is only meaningful when wave size is steady
         max_urls_per_host_per_wave=(DEEP_HOST_CAP if BENCH_DEEP else 0),
-        # proportional seed quotas make host0 ~20% of the frontier (the
-        # honest Zipf shape); without salting its per-host FIFO window
-        # sort runs on ONE task and serializes the high level's tail.
-        # The salted path is exact (bit-identical to the plain window,
-        # pinned by tests/test_skew.py), so it is on for every arm —
-        # at 10^10 URLs no one crawls hot hosts unsalted.
-        salt_hot_hosts=True,
     )
     eng = CrawlEngine(spark, pages, opts)
     initial_seen = None

@@ -129,12 +129,24 @@ class Options:
     evicted from ``host_state`` (robots re-fetched on reappearance).
 
     Only values that callers set differently are options.  Fixed engine
-    policy lives next to the code that applies it: the Bloom engage
-    ratio is ``plans.engine.BLOOM_ENGAGE_SEEN_PER_WAVE_RATIO``, the
-    salted-sequencing bucket count is the skew operators' default
-    (2 × ``defaultParallelism``), the end-of-wave commits always
-    overlap, and the session's shuffle partitions are set by
-    ``session.get_spark``.
+    policy lives next to the code that applies it, and decisions the
+    engine can make from the exact row counts every commit records are
+    not options:
+
+    - hot-host salting (SURVEY §4 P11) follows the known wave bound:
+      hosts whose previous-wave batch reaches
+      ``operators.skew.SALT_THRESHOLD_ROWS`` (clamped to the wave's
+      per-task share) take the salted path, and a wave bounded below it
+      runs the plain window with no detection job;
+    - the Bloom fold threshold is derived from shard capacity
+      (``plans.engine.BLOOM_FOLD_MIN_ROWS``), and the engage ratio is
+      ``plans.engine.BLOOM_ENGAGE_SEEN_PER_WAVE_RATIO``;
+    - there is one Bloom probe, the broadcast join
+      (``operators.seen.apply_bloom_join``);
+    - the salted-sequencing bucket count is the skew operators' default
+      (2 × ``defaultParallelism``), the end-of-wave commits always
+      overlap, and the session's shuffle partitions are set by
+      ``session.get_spark``.
     """
 
     robot_user_agent: str = DEFAULT_ROBOT_USER_AGENT
@@ -166,33 +178,9 @@ class Options:
     # localCheckpoint otherwise) so plan depth and probe cost stay flat
     # on deep frontiers.  0 = never compact.
     seen_compact_every: int = 8
-    # hot-host salted sequencing (SURVEY §4 P11): exact per-host
-    # seq/cumsum via range-bucketed two-phase ranking instead of a
-    # single-partition host window; bit-identical results — turn on for
-    # skewed frontiers, off for small parity runs.  Only hosts whose
-    # per-wave row count reaches salt_threshold_rows take the salted
-    # path (its sampling + materialization cost a full extra pass over
-    # the subset); everything below it is a window group one task sorts
-    # in milliseconds, so it takes the plain window.  The per-wave hot
-    # scan is skipped outright when commit metadata already bounds the
-    # wave below the threshold.
-    salt_hot_hosts: bool = False
-    # Residual exposure (documented, ADVICE r5): hot detection reads the
-    # PREVIOUS wave's per-host batch sizes, so a host that jumps from
-    # ~0 to far beyond this threshold within ONE wave sorts its whole
-    # window group in one task for that wave (slow tail / memory
-    # pressure, never a wrong result — the salted path is bit-identical
-    # for any hot list) and salts from the next wave on.  The per-host
-    # jump is unbounded even though aggregate wave growth is ~3x/hop.
-    salt_threshold_rows: int = 1_000_000
     bloom_partitions: int = 32
     bloom_expected_per_partition: int = 1_000_000
     bloom_fpp: float = 0.01
-    # fold seen increments into the bitmaps only once this many pending
-    # rows accumulate (they are probed exactly via broadcast meanwhile);
-    # 0 = auto (shard capacity / 8).  Keeps the common wave at ZERO
-    # bloom-maintenance jobs.
-    bloom_fold_min_rows: int = 0
     # crossover gate: with seen below this many rows the sidecar stays
     # DORMANT (no build, no probe, zero jobs — the exact join alone is
     # cheaper than any pre-filter there) and engages with ONE build
@@ -200,17 +188,11 @@ class Options:
     # start (small-fixture tests exercise the bloom path directly);
     # -1 (the DEFAULT) = derive the threshold from the measured
     # crossover as a seen/wave RATIO (engine.BLOOM_ENGAGE_SEEN_PER_WAVE_RATIO
-    # × the current wave's candidate bound).  The threshold only acts
-    # when the engine knows the seen row count from commit metadata
-    # (durable store); otherwise the bloom engages immediately —
-    # dormancy must never risk a stale filter.  Caller-prebuilt
-    # initial_bloom / resumed shards always engage.
+    # × the current wave's candidate bound), both counted exactly by
+    # the commits.  Dormancy never risks a stale filter: engaging
+    # builds over the full seen set.  Caller-prebuilt initial_bloom /
+    # resumed shards always engage.
     bloom_min_seen_rows: int = -1
-    # probe strategy: "join" broadcasts the shard words and bit-tests
-    # in pure JVM expressions (no Python, no candidate shuffle — the
-    # fast path while the filter fits a broadcast); "cogroup" keeps
-    # shards fully distributed (the ~12 GB 10^10-URL regime)
-    bloom_probe: str = "join"
     checkpoint_dir: str | None = None  # None → in-memory localCheckpoint
     # durable-state backend override (sources/statestore.py StateStore);
     # None → ParquetStateStore(checkpoint_dir) when checkpoint_dir is

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from crawlspark.config import Options
 from crawlspark.functions.udfs import make_canonicalize_udf
+from crawlspark.operators import skew
 
 # ordering tuple carried by every candidate: (parent wave, parent host,
 # parent per-host seq, link position) — a deterministic linearization of
@@ -59,7 +60,7 @@ def admit_candidates(
     pin=None,
     bloom_words: DataFrame | None = None,
     bloom_pending: DataFrame | None = None,
-    rows_bound: int | None = None,
+    rows_bound: int = 0,
 ) -> DataFrame:
     """Annotate candidates with canonical columns + admission verdicts.
 
@@ -67,6 +68,9 @@ def admit_candidates(
       url_norm, host, path, is_robots, is_abs_http,
       is_visited, admitted (page rows), robots_bypass (stacked robots rows)
     Filter-hook invocation count = rows where ``counts_filter``.
+    ``rows_bound`` is the candidates' row count: at or above
+    ``skew.SALT_THRESHOLD_ROWS`` the within-wave duplicate check takes
+    the skew-hardened groupBy form.
     """
     canon = make_canonicalize_udf(opts.url_normalization_flags)
     pinned = False  # at most ONE pinned copy of the wave candidates
@@ -89,27 +93,17 @@ def admit_candidates(
         "_seen", F.lit(True)
     )
     if bloom_df is not None:
-        from crawlspark.operators.seen import apply_bloom_df, apply_bloom_join
+        from crawlspark.operators.seen import apply_bloom_join
 
-        if getattr(opts, "bloom_probe", "join") == "join":
-            df = apply_bloom_join(
-                df,
-                bloom_df,
-                url_col="url_norm",
-                num_partitions=opts.bloom_partitions,
-                expected_per_partition=opts.bloom_expected_per_partition,
-                fpp=opts.bloom_fpp,
-                word_rows=bloom_words,
-            )
-        else:
-            df = apply_bloom_df(
-                df,
-                bloom_df,
-                url_col="url_norm",
-                num_partitions=opts.bloom_partitions,
-                expected_per_partition=opts.bloom_expected_per_partition,
-                fpp=opts.bloom_fpp,
-            )
+        df = apply_bloom_join(
+            df,
+            bloom_df,
+            url_col="url_norm",
+            num_partitions=opts.bloom_partitions,
+            expected_per_partition=opts.bloom_expected_per_partition,
+            fpp=opts.bloom_fpp,
+            word_rows=bloom_words,
+        )
         if bloom_pending is not None:
             # seen increments not yet folded into the filter (the engine
             # folds lazily — rebuilding MB-scale bitmaps for a small
@@ -218,9 +212,7 @@ def admit_candidates(
     first_admit_expr = F.when(
         admit_if_unvisited & ~seen_flag & ~F.col("is_robots"), _ord_rank()
     )
-    if opts.salt_hot_hosts and (
-        rows_bound is None or rows_bound >= opts.salt_threshold_rows
-    ):
+    if rows_bound >= skew.SALT_THRESHOLD_ROWS:
         # skew-hardened formulation: a URL linked from 10^6+ pages in one
         # wave puts all its duplicate candidates into ONE window
         # partition (WindowExec has no partial aggregation).  groupBy

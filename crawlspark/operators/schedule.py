@@ -13,9 +13,15 @@ schedule is exactly reproducible.  The host's ``next_free_ms`` carries
 across waves through the host_state table.
 
 Delay resolution (default ComputeDelay, ext.go:109-114): robots
-crawl-delay if present else the configured delay; a custom
+crawl-delay if present else the configured delay.  A custom
 ``compute_delay`` hook receives lag columns over the host window
 (last_delay_ms) like the reference's DelayInfo (ext.go:14-21).
+
+Hot hosts: when the engine's committed row counts flag hosts as hot
+(``hot_hosts``), the default-delay schedule takes seq and cumsum from
+:func:`skew.host_seq_cumsum`, salted for those hosts and the plain
+window for the rest; with no hot host (every wave below the salt
+threshold) it is the plain host window below.
 """
 
 from __future__ import annotations
@@ -66,7 +72,7 @@ def politeness_schedule(
         F.col("opts_delay_ms"),
     ).cast("bigint")
 
-    if compute_delay is None and opts.salt_hot_hosts:
+    if compute_delay is None and hot_hosts:
         # hot-host salted path (SURVEY §4 P11): delay needs no window
         # here, so seq + exclusive cumsum come from the fused two-phase
         # ranking for the hosts in ``hot_hosts`` (detected per wave by
@@ -82,7 +88,7 @@ def politeness_schedule(
             df,
             value_col="delay_ms",
             ord_cols=ord_all,
-            hot_hosts=hot_hosts or [],
+            hot_hosts=hot_hosts,
             seq_col="seq_in_wave",
             cumsum_col="_cum_excl",
         )

@@ -11,8 +11,11 @@ Construction is fully distributed: hashes are computed JVM-side with
 ``xxhash64`` (two independent seeds → double hashing, Kirsch-Mitzenmacher),
 bitmaps are OR-reduced per partition with ``applyInPandas``, and stored
 as binary rows ``(pid, bitmap)`` — the Iceberg-persistable shard format
-the wave loop checkpoints.  Application broadcasts the bitmap shards
-(MBs) and tests membership in a vectorized ``mapInPandas`` pass.
+the wave loop checkpoints.  The engine probes with
+:func:`apply_bloom_join`: the shards convert once into ``array<bigint>``
+word rows, broadcast, and the bit tests run as JVM expressions.
+:func:`apply_bloom` (collected shards, a vectorized ``mapInPandas``
+pass) is the reference the probe tests compare against.
 
 Guarantee: NO false negatives (a seen URL always tests "maybe"); false
 positives only cost a wasted exact-join lookup, never correctness,
@@ -114,20 +117,26 @@ def build_bloom(
     return hashed.groupBy("_pid").applyInPandas(make, BLOOM_DDL)
 
 
+def _or_shard(pdf):
+    """OR together the bitmap rows of one pid (e.g. unmerged per-wave
+    increments) into one ``(pid, bitmap)`` row."""
+    import pandas as pd
+
+    arrs = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bitmap"]]
+    size = max(a.size for a in arrs)
+    acc = np.zeros(size, dtype=np.uint8)
+    for a in arrs:
+        acc[: a.size] |= a
+    return pd.DataFrame(
+        {"pid": [int(pdf["pid"].iloc[0])], "bitmap": [acc.tobytes()]}
+    )
+
+
 def merge_blooms(blooms: DataFrame) -> DataFrame:
     """OR together shards with the same pid (e.g. per-wave increments)."""
-
-    def orf(key, pdf):
-        import pandas as pd
-
-        arrs = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bitmap"]]
-        size = max(a.size for a in arrs)
-        acc = np.zeros(size, dtype=np.uint8)
-        for a in arrs:
-            acc[: a.size] |= a
-        return pd.DataFrame({"pid": [int(key[0])], "bitmap": [acc.tobytes()]})
-
-    return blooms.groupBy("pid").applyInPandas(orf, BLOOM_DDL)
+    return blooms.groupBy("pid").applyInPandas(
+        lambda key, pdf: _or_shard(pdf), BLOOM_DDL
+    )
 
 
 def apply_bloom(
@@ -239,14 +248,12 @@ def apply_bloom_join(
     word rows (pass a precomputed/persisted ``word_rows`` to skip the
     conversion) and broadcast-join onto the candidates by pid; the k
     double-hash bit tests are ``element_at`` + unsigned shifts inside
-    whole-stage codegen.  No Python in the probe, no extra shuffle of
-    the candidate rows (vs the cogroup form, which Arrow-round-trips
-    every candidate and shuffles them by pid).
+    whole-stage codegen.  No Python in the probe and no shuffle of
+    the candidate rows.
 
-    This is the executor-cheap path while the total filter fits a
-    broadcast (up to GB-scale); beyond that — the full 10^10-URL
-    regime, ~12 GB of shards — use :func:`apply_bloom_df`, which keeps
-    shards fully distributed.
+    This is the engine's probe.  It holds while the total filter fits
+    a broadcast (up to GB-scale); :func:`apply_bloom` is the reference
+    the probe tests compare it against.
     """
     m, k = bloom_params(expected_per_partition, fpp)
 
@@ -282,90 +289,6 @@ def apply_bloom_join(
     return joined.select(
         *[hashed[c] for c in candidates.columns],
         maybe.alias("maybe_seen"),
-    )
-
-
-def _or_shard(pdf):
-    """OR together possibly-unmerged increment rows of one pid."""
-    import pandas as pd
-
-    arrs = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bitmap"]]
-    size = max(a.size for a in arrs)
-    acc = np.zeros(size, dtype=np.uint8)
-    for a in arrs:
-        acc[: a.size] |= a
-    return pd.DataFrame(
-        {"pid": [int(pdf["pid"].iloc[0])], "bitmap": [acc.tobytes()]}
-    )
-
-
-def apply_bloom_df(
-    candidates: DataFrame,
-    shards: DataFrame,
-    url_col: str = "url_norm",
-    num_partitions: int = 32,
-    expected_per_partition: int = 1_000_000,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Annotate candidates with ``maybe_seen`` via a co-partitioned
-    cogroup against the ``(pid, bitmap)`` shard TABLE — the 10^10-URL
-    path (vs ``apply_bloom``'s collected-shard-list form).
-
-    The filter never exists as one object anywhere: shards stay
-    distributed rows (the Iceberg-persistable format the wave loop
-    checkpoints), candidates shuffle once on pid, and each cogroup task
-    ORs its pid's shard rows (so unmerged per-wave increments work
-    unchanged) and bit-tests its candidates vectorized in one NumPy
-    pass.  No driver collect, no closure capture, no per-task
-    re-broadcast — at 10^10 URLs / 1% fpp the ~12 GB of bitmap bytes
-    move shuffle-to-shuffle between executors only.
-    """
-    m, k = bloom_params(expected_per_partition, fpp)
-    hashed = _with_hashes(candidates, url_col, num_partitions)
-    cols = candidates.columns
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def probe(key, cand_pdf, shard_pdf):
-        import pandas as pd
-
-        if cand_pdf.empty:
-            out = cand_pdf[cols].copy()
-            out["maybe_seen"] = pd.Series([], dtype=bool)
-            return out
-        if shard_pdf.empty:
-            out = cand_pdf[cols].copy()
-            out["maybe_seen"] = False  # no shard → definitely unseen
-            return out
-        arrs = [np.frombuffer(b, dtype=np.uint8) for b in shard_pdf["bitmap"]]
-        size = max(a.size for a in arrs)
-        bits = np.zeros(size, dtype=np.uint8)
-        for a in arrs:
-            bits[: a.size] |= a
-        mm = np.int64(bits.size * 8)
-        # null url_norm → _hvalid=false; report "not seen", the same
-        # answer the JVM join path gives for null keys.  Hash columns
-        # are non-null JVM-side so they stay exact int64 through Arrow.
-        valid = cand_pdf["_hvalid"].to_numpy(dtype=bool)
-        h1 = np.mod(cand_pdf["_h1"].to_numpy(dtype=np.int64)[valid], mm)
-        h2 = np.mod(cand_pdf["_h2"].to_numpy(dtype=np.int64)[valid], mm)
-        acc = np.ones(int(valid.sum()), dtype=bool)
-        for i in range(k):
-            idx = np.mod(h1 + np.int64(i) * h2, mm)
-            byte = bits[idx >> 3]
-            bit = (byte >> (7 - (idx & 7).astype(np.uint8))) & 1
-            acc &= bit.astype(bool)
-        maybe = np.zeros(len(cand_pdf), dtype=bool)
-        maybe[valid] = acc
-        out = cand_pdf[cols].copy()
-        out["maybe_seen"] = maybe
-        return out
-
-    return (
-        hashed.groupBy("_pid")
-        .cogroup(shards.groupBy("pid"))
-        .applyInPandas(probe, out_schema)
     )
 
 

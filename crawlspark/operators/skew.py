@@ -29,19 +29,19 @@ cumulative sum over the un-salted host (SURVEY §2.5) — only the
 
 The machinery is applied PER HOST, not per wave: :func:`host_seq` and
 :func:`host_seq_cumsum` route only hosts whose wave row count reaches
-the salt threshold through the range-bucketed path; every other host
-takes the plain window.  The engine detects hot hosts from the
-PREVIOUS wave's per-host batch sizes recorded in its host_state
-commits (any list is correct — results are bit-identical either way —
-so a one-wave-stale statistic costs at most one slow-tail wave);
-:func:`hot_hosts_over` remains the exact same-wave detector for
-callers that want to pay a count job for it.  The
-salted path's sampling pass + eager materialization are real costs —
-profiling attributed most of a wave's non-scaling wall to them when
-they ran wave-wide — and a sub-threshold host's window group is
-something one task sorts in milliseconds, so paying them for all hosts
-bought nothing.  A wave whose TOTAL row count is already bounded below
-the threshold by commit metadata skips hot detection outright.
+the salt threshold (:data:`SALT_THRESHOLD_ROWS`) through the
+range-bucketed path; every other host takes the plain window, and an
+empty hot list is exactly the plain window.  The engine always
+sequences through them and detects hot hosts from the PREVIOUS wave's
+per-host batch sizes recorded in its host_state commits (any list is
+correct — results are bit-identical either way — so a one-wave-stale
+statistic costs at most one slow-tail wave).  The salted path's
+sampling pass + eager materialization are real costs — profiling
+attributed most of a wave's non-scaling wall to them when they ran
+wave-wide — and a sub-threshold host's window group is something one
+task sorts in milliseconds, so paying them for all hosts bought
+nothing.  A wave whose committed row count is below the threshold
+skips hot detection outright.
 
 CORRECTNESS NOTE — the bucket assignment is MATERIALIZED (eager
 localCheckpoint) before use: ``repartitionByRange`` *samples* the data
@@ -57,37 +57,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def hot_hosts_over(
-    df: DataFrame,
-    threshold: int,
-    host_col: str = "host",
-    upper_bound: int | None = None,
-) -> list:
-    """Driver-side list of hosts whose row count in ``df`` reaches
-    ``threshold`` — the hosts whose window group a single task should
-    not be asked to hold (SURVEY §4 P11).
-
-    The list is a SCHEDULING statistic, not data: it is bounded by
-    ``total_rows / threshold`` (≤ 10^4 entries even at a 10^10-row wave
-    with a 10^6 threshold), the same shape AQE's skew-join statistics
-    collect on the driver.  When ``upper_bound`` (a known bound on
-    ``df``'s total rows, e.g. from the previous wave's commit metadata)
-    is already below the threshold, no host can possibly be hot and the
-    count job is skipped entirely — the common case for every crawl
-    whose waves are merely large, not pathological."""
-    if threshold <= 0:
-        return []
-    if upper_bound is not None and upper_bound < threshold:
-        return []
-    rows = (
-        df.groupBy(host_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= threshold)
-        .select(host_col)
-        .collect()
-    )
-    return [r[0] for r in rows]
+# Per-host rows per wave at which a host's window group takes the
+# salted path (the OOM guard on one task's sort); the engine also
+# clamps it to the wave's per-task share.  Residual exposure: hot
+# detection reads the PREVIOUS wave's per-host batch sizes, so a host
+# that jumps from ~0 to far beyond this within ONE wave sorts its whole
+# window group in one task for that wave (slow tail / memory pressure,
+# never a wrong result) and salts from the next wave on.  Read at call
+# time, so tests can lower it to force the salted path at fixture scale.
+SALT_THRESHOLD_ROWS = 1_000_000
 
 
 def host_seq(

@@ -17,9 +17,10 @@ The loop-carried state is one :class:`WaveState`; it also owns the
 durable-state contract (the manifest it writes and its load from a
 ``StateStore``), so ``resume()`` is "load a WaveState, run the loop".
 
-The loop terminates when a wave admits nothing and nothing was
-injected — the fixpoint test replacing the reference's pending-work
-refcount (crawler.go:293-297) — or when MaxVisits is reached
+The loop terminates when the committed candidates and deferred rows
+count zero — every commit counts its rows with an observation on its
+own job, so this is the reference's exact pending-work refcount
+(crawler.go:293-297) at no extra job — or when MaxVisits is reached
 (crawler.go:303-309).
 
 Scale design:
@@ -46,7 +47,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from crawlspark.config import LogFlags, Options
@@ -57,6 +58,7 @@ from crawlspark.functions.udfs import (
     make_visit_udf,
     robots_allowed_udf,
 )
+from crawlspark.operators import skew
 from crawlspark.operators.admission import (
     CANDIDATE_DDL,
     ORD_COLS,
@@ -96,12 +98,18 @@ DEFER_DDL = (
 
 # Bloom dormancy crossover as a seen/wave RATIO, used when
 # Options.bloom_min_seen_rows is -1 (the default): the sidecar engages
-# once the metadata-tracked seen set reaches this multiple of the
+# once the counted seen set reaches this multiple of the
 # current wave's candidate bound.  The A/B record behind it
 # (BENCH_r05/BASELINE.md): at 16M seen vs a 200k-row wave (80×) bloom
 # is a tie-to-loss across sessions; at 32M vs 100k (320×) it wins
 # decisively (1.94×) — 160× sits between the measured tie and win.
 BLOOM_ENGAGE_SEEN_PER_WAVE_RATIO = 160
+
+# fold the pending seen increments into the Bloom bitmaps once they
+# reach this many rows (they are probed exactly by broadcast
+# meanwhile); 0 derives it from shard capacity: max(100k, capacity / 8).
+# Keeps the common wave at zero Bloom-maintenance jobs.
+BLOOM_FOLD_MIN_ROWS = 0
 
 
 def _ok():
@@ -152,10 +160,10 @@ class CrawlResult:
 class WaveState:
     """The state the wave loop carries from one wave to the next, with
     the manifest a wave commit writes and the load that reads it back.
-    Row counts come from commit metadata; ``None`` means unknown."""
+    Row counts are exact: every commit counts the rows it writes."""
 
     candidates: DataFrame
-    cand_rows: int | None
+    cand_rows: int
     seed_hosts: DataFrame | None
     n_seeds: int
     n_seed_hosts: int
@@ -164,10 +172,10 @@ class WaveState:
     # wave (None = empty).  They are in neither candidates nor
     # re-admittable seen, so they are durable state like candidates.
     deferred: DataFrame | None = None
-    deferred_rows: int | None = 0
+    deferred_rows: int = 0
     seen_parts: list[DataFrame] = field(default_factory=list)
     seen_snapshot_wave: int | None = None
-    seen_rows: int | None = 0
+    seen_rows: int = 0
     # whether run(initial_seen=...) committed a seed-stage seen_inc
     has_initial_seen: bool = False
     # Bloom sidecar: distributed (pid, bitmap) shards, the probe-ready
@@ -202,7 +210,17 @@ class WaveState:
     @classmethod
     def load(cls, store, use_bloom: bool) -> "WaveState":
         """The state after the last committed wave, read without a Spark
-        job.  Seed hosts stay ``None`` when the seed tables are missing."""
+        job.  Seed hosts stay ``None`` when the seed tables are missing;
+        any other table without a row count fails the load.  A manifest
+        without counts (written before they were recorded) takes them
+        from the store's metadata."""
+
+        def rows(name: str, w: int) -> int:
+            n = store.rows(name, w)
+            if n is None:
+                raise ValueError(f"checkpoint table {name} of wave {w} is missing")
+            return n
+
         m = store.get_manifest()
         wave = m["wave"]
         last = wave - 1
@@ -211,12 +229,15 @@ class WaveState:
         if snapw is not None:
             # the snapshot covers the initial seen set (if any) plus
             # increments 0..snapw
-            seen_parts = [store.read("seen_snapshot", snapw)] + [
-                store.read("seen_inc", w) for w in range(snapw + 1, wave)
+            seen_tables = [("seen_snapshot", snapw)] + [
+                ("seen_inc", w) for w in range(snapw + 1, wave)
             ]
         else:
-            seen_parts = [store.read("seen_inc", -1)] if has_initial else []
-            seen_parts += [store.read("seen_inc", w) for w in range(wave)]
+            seen_tables = [("seen_inc", -1)] if has_initial else []
+            seen_tables += [("seen_inc", w) for w in range(wave)]
+        seen_rows = m.get("seen_rows")
+        if seen_rows is None:
+            seen_rows = sum(rows(*t) for t in seen_tables)
         host_state = store.read("host_state", last)
         if "last_wave_rows" not in host_state.columns:
             # checkpoints written before the hot-host statistic moved
@@ -226,6 +247,8 @@ class WaveState:
                 "last_wave_rows", F.lit(0).cast("bigint")
             )
         deferred_rows = m.get("deferred_rows", 0)
+        if deferred_rows is None:
+            deferred_rows = rows("deferred", last)
         deferred = (
             store.read("deferred", last) if deferred_rows != 0 else None
         )
@@ -238,22 +261,22 @@ class WaveState:
             bloom = store.read("bloom", fold_wave)
             for w in range(fold_wave + 1, wave):
                 pending.append(store.read("seen_inc", w))
-                pending_rows += store.rows("seen_inc", w) or 0
+                pending_rows += rows("seen_inc", w)
         n_seeds = store.rows("seed_candidates", -1)
         n_seed_hosts = store.rows("seed_hosts", -1)
         has_seed = n_seeds is not None and n_seed_hosts is not None
         return cls(
             candidates=store.read("candidates", last),
-            cand_rows=store.rows("candidates", last),
+            cand_rows=rows("candidates", last),
             seed_hosts=store.read("seed_hosts", -1) if has_seed else None,
             n_seeds=n_seeds or 0,
             n_seed_hosts=n_seed_hosts or 0,
             host_state=host_state,
             deferred=deferred,
             deferred_rows=deferred_rows,
-            seen_parts=seen_parts,
+            seen_parts=[store.read(*t) for t in seen_tables],
             seen_snapshot_wave=snapw,
-            seen_rows=m.get("seen_rows"),
+            seen_rows=seen_rows,
             has_initial_seen=has_initial,
             bloom=bloom,
             bloom_pending_parts=pending,
@@ -330,42 +353,32 @@ class CrawlEngine:
 
         opts.bloom_min_seen_rows: -1 (default) → the measured-crossover
         RATIO gate (engage at ratio × the current wave's candidate
-        bound; unknown bound → engage); 0 → always engage; >0 →
-        absolute row threshold.  An unknown seen count always engages:
-        dormancy is an optimization, never a correctness knob."""
+        bound); 0 → always engage; >0 → absolute row threshold."""
         gate = self.opts.bloom_min_seen_rows
         if gate < 0:
-            if st.cand_rows is None:
-                gate = 0
-            elif st.cand_rows == 0:
-                # empty next frontier: nothing will probe the filter, so
-                # a build pass now is a pure loss
-                gate = 1 << 62
-            else:
-                gate = BLOOM_ENGAGE_SEEN_PER_WAVE_RATIO * st.cand_rows
-        return gate > 0 and st.seen_rows is not None and st.seen_rows < gate
+            # empty next frontier: nothing will probe the filter, so a
+            # build pass now is a pure loss
+            gate = (
+                BLOOM_ENGAGE_SEEN_PER_WAVE_RATIO * st.cand_rows
+                if st.cand_rows
+                else 1 << 62
+            )
+        return st.seen_rows < gate
 
-    def _ckpt(self, df: DataFrame, name: str, wave: int) -> DataFrame:
+    def _ckpt(self, df: DataFrame, name: str, wave: int) -> tuple[DataFrame, int]:
+        """Commit one state table: (frame backed by the committed rows,
+        row count).  The count is an observation on the commit's own
+        job, so it costs no extra job in either mode."""
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         # seed-stage state (wave < 0) lives under seed/, outside the
         # wave=* namespace: every wave=* dir carries a metrics table
         # (per-partition lineage contract), which seed setup has none of
         if self._store is not None:
-            return self._store.commit(df, name, wave)
-        return df.localCheckpoint(eager=True)
-
-    def _ckpt_counted(
-        self, df: DataFrame, name: str, wave: int
-    ) -> tuple[DataFrame, int | None]:
-        out = self._ckpt(df, name, wave)
-        if self._store is not None:
-            return out, self._store.rows(name, wave)
-        return out, None
-
-    def _commit_count(self, df: DataFrame, name: str) -> tuple[DataFrame, int]:
-        """Commit a seed-stage table and count it: from commit metadata
-        when the store has it, else with a count job."""
-        out, n = self._ckpt_counted(df, name, -1)
-        return out, n if n is not None else out.count()
+            out = self._store.commit(df, name, wave)
+        else:
+            out = df.localCheckpoint(eager=True)
+        return out, obs.get["rows"]
 
     def _seed_candidates(self, seeds) -> DataFrame:
         rows = [
@@ -400,10 +413,8 @@ class CrawlEngine:
             # seed commits evaluate identical rows: overlap them
             cand = self._seed_candidates(seeds)
             (cand, n_seeds), (hosts, n_hosts) = _overlap(
-                lambda: self._commit_count(cand, "seed_candidates"),
-                lambda: self._commit_count(
-                    self._seed_hosts_df(cand), "seed_hosts"
-                ),
+                lambda: self._ckpt(cand, "seed_candidates", -1),
+                lambda: self._ckpt(self._seed_hosts_df(cand), "seed_hosts", -1),
             )
             return cand, hosts, n_seeds, n_hosts
         # a DataFrame seed set has no inherent order (a reference seed
@@ -428,10 +439,8 @@ class CrawlEngine:
         # missing a host that seed_candidates contains, silently
         # dropping that host's subtree under same_host_only — so the
         # seed hosts come from the COMMITTED candidates
-        cand, n_seeds = self._commit_count(cand, "seed_candidates")
-        hosts, n_hosts = self._commit_count(
-            self._seed_hosts_df(cand), "seed_hosts"
-        )
+        cand, n_seeds = self._ckpt(cand, "seed_candidates", -1)
+        hosts, n_hosts = self._ckpt(self._seed_hosts_df(cand), "seed_hosts", -1)
         return cand, hosts, n_seeds, n_hosts
 
     def _start(self, seeds):
@@ -492,21 +501,18 @@ class CrawlEngine:
         the (huge) seen table at every process start.  A missing URL
         would be a false-negative hole the exact join never repairs."""
         seeds = self._start(seeds)
-        seen_rows: int | None = 0
-        if initial_seen is not None and self._store is not None:
-            # commit the pre-populated seen set as seed-stage state so
-            # resume() reconstructs it; the commit (10^7+ rows in
-            # mid-frontier mode) is independent of the seed tables, so
-            # it overlaps them
-            seed_state, initial_seen = _overlap(
-                lambda: self._seed_stage(seeds),
-                lambda: self._store.commit(initial_seen, "seen_inc", -1),
-            )
-            seen_rows = self._store.rows("seen_inc", -1)
-        else:
-            seed_state = self._seed_stage(seeds)
-            if initial_seen is not None:
-                seen_rows = None
+        # commit the pre-populated seen set as seed-stage state so
+        # resume() reconstructs it; the commit (10^7+ rows in
+        # mid-frontier mode) is independent of the seed tables, so it
+        # overlaps them
+        seed_state, (seen, seen_rows) = _overlap(
+            lambda: self._seed_stage(seeds),
+            lambda: (
+                (self._empty(SEEN_DDL), 0)
+                if initial_seen is None
+                else self._ckpt(initial_seen, "seen_inc", -1)
+            ),
+        )
         candidates, seed_hosts, n_seeds, n_seed_hosts = seed_state
         st = WaveState(
             candidates=candidates,
@@ -515,15 +521,13 @@ class CrawlEngine:
             n_seeds=n_seeds,
             n_seed_hosts=n_seed_hosts,
             host_state=self._empty(HOST_STATE_DDL),
-            seen_parts=[
-                self._empty(SEEN_DDL) if initial_seen is None else initial_seen
-            ],
+            seen_parts=[seen],
             seen_rows=seen_rows,
             has_initial_seen=initial_seen is not None,
             counters=Counters(start=int(self.ext.start is not None)),
         )
         if self.opts.use_bloom_seen and initial_bloom is not None:
-            st.bloom = self._ckpt(initial_bloom, "bloom", -1)
+            st.bloom, _ = self._ckpt(initial_bloom, "bloom", -1)
         return self._crawl(st)
 
     # ------------------------------------------------------------------
@@ -550,7 +554,7 @@ class CrawlEngine:
         wave_metrics: list[dict] = []
         while st.wave < opts.max_waves:
             t0 = time.perf_counter()
-            if self._frontier_empty(st):
+            if st.cand_rows == 0 and st.deferred_rows == 0:
                 break
             wave_metrics.append(self._wave(st, robots_cache, t0))
             # reaching MaxVisits discards the limiting visit's harvest
@@ -577,17 +581,6 @@ class CrawlEngine:
             n_seeds=st.n_seeds,
             n_seed_hosts=st.n_seed_hosts,
             log=self._log_lines,
-        )
-
-    @staticmethod
-    def _frontier_empty(st: WaveState) -> bool:
-        # from commit metadata when known; only unknown counts pay an
-        # isEmpty job
-        def empty(df, rows):
-            return df is None or (df.isEmpty() if rows is None else rows == 0)
-
-        return empty(st.candidates, st.cand_rows) and empty(
-            st.deferred, st.deferred_rows
         )
 
     def _wave(self, st: WaveState, robots_cache, t0: float) -> dict:
@@ -642,11 +635,11 @@ class CrawlEngine:
         host_state = self._next_host_state(
             st, parsed, host_next_free(scheduled), precap, active_hosts
         )
-        stats, seen_inc = self._commit(
+        stats, (seen_inc, inc_rows) = self._commit(
             st, adm, gated, phased, parsed,
             next_candidates, seen_inc, host_state, deferred_new,
         )
-        self._advance_seen(st, seen_inc)
+        self._advance_seen(st, seen_inc, inc_rows)
         counts = self._settle(st, stats, adm, parsed, scheduled)
 
         summary = {
@@ -669,8 +662,7 @@ class CrawlEngine:
                 schema=CANDIDATE_DDL,
             ).localCheckpoint(eager=True)
             st.candidates = st.candidates.unionByName(injected)
-            if st.cand_rows is not None:
-                st.cand_rows += len(self._pending)
+            st.cand_rows += len(self._pending)
             self._pending = []
 
         st.wave += 1
@@ -690,7 +682,7 @@ class CrawlEngine:
         # cluster has.  Exactly ×1: a 2× fan-out measured strictly slower
         # at every level (stage-grid A/B in BASELINE.md).
         opts = self.opts
-        if st.bloom is not None and st.bloom_words is None and opts.bloom_probe == "join":
+        if st.bloom is not None and st.bloom_words is None:
             from crawlspark.operators.seen import bloom_words
 
             # probe-ready word rows, converted ONCE per (re)build and
@@ -708,7 +700,7 @@ class CrawlEngine:
                 if st.bloom_pending_parts
                 else None
             ),
-            pin=pin if (opts.salt_hot_hosts or opts.use_bloom_seen) else None,
+            pin=pin,
             rows_bound=st.cand_rows,
         ).repartition(self.spark.sparkContext.defaultParallelism).persist()
 
@@ -797,10 +789,10 @@ class CrawlEngine:
         # A host is "hot" RELATIVE to the wave: one task's fair share is
         # upper/parallelism rows, and a window group beyond that share
         # dominates the stage tail.  Clamp: never below 50k rows (a sort
-        # one task does in milliseconds), never above the configured
-        # absolute threshold (the OOM guard the option names).  When
-        # commit metadata already bounds the wave below the threshold,
-        # no job runs.
+        # one task does in milliseconds), never above the absolute
+        # threshold skew.SALT_THRESHOLD_ROWS (the OOM guard).  When the
+        # committed counts bound the wave below the threshold, no job
+        # runs.
         #
         # The list comes from the PREVIOUS wave's per-host batch sizes
         # (host_state.last_wave_rows, the pre-cap window-group size): a
@@ -809,26 +801,15 @@ class CrawlEngine:
         # filter+collect scans only the checkpoint-backed host_state.  A
         # host turning hot WITHIN a wave sorts in one task for that wave
         # (slow tail, not wrong), then salts from the next wave on.
-        opts = self.opts
-        upper = (
-            st.cand_rows + st.deferred_rows
-            if st.cand_rows is not None and st.deferred_rows is not None
-            else None
-        )
+        upper = st.cand_rows + st.deferred_rows
         # the politeness schedule windows over HEAD+GET-EXPLODED rows
         # (up to 2x the counts here), so when a HEAD phase is possible
-        # the absolute guard applies at half its value; floor at 1, as
-        # 0 keeps its "never salt" meaning
-        head_possible = opts.head_before_get or self.ext.head_factory is not None
-        thresh = (
-            max(1, opts.salt_threshold_rows // (2 if head_possible else 1))
-            if opts.salt_threshold_rows > 0
-            else 0
-        )
-        if upper is not None:
-            par = self.spark.sparkContext.defaultParallelism
-            thresh = min(thresh, max(50_000, upper // par))
-        if thresh <= 0 or (upper is not None and upper < thresh):
+        # the absolute guard applies at half its value (floor 1)
+        head_possible = self.opts.head_before_get or self.ext.head_factory is not None
+        thresh = max(1, skew.SALT_THRESHOLD_ROWS // (2 if head_possible else 1))
+        par = self.spark.sparkContext.defaultParallelism
+        thresh = min(thresh, max(50_000, upper // par))
+        if upper < thresh:
             return []
         return [
             r[0]
@@ -867,23 +848,14 @@ class CrawlEngine:
         # seeds, so a 64-bit collision between two same-host seeds must
         # still order deterministically
         order = ORD_COLS + ["url_norm"]
-        hot_hosts: list = []
-        if opts.salt_hot_hosts:
-            # salted-key skew mitigation (SURVEY §4 P11): FIFO order is
-            # preserved exactly (range buckets are monotone in the
-            # ordering tuple); the politeness schedule salts the same
-            # hosts
-            from crawlspark.operators.skew import host_seq
-
-            hot_hosts = self._hot_hosts(st)
-            page_rows = host_seq(
-                page_rows, order, hot_hosts=hot_hosts, seq_col="_rn_host"
-            )
-        else:
-            w_host = Window.partitionBy("host").orderBy(*order)
-            page_rows = page_rows.withColumn(
-                "_rn_host", F.row_number().over(w_host)
-            )
+        # salted-key skew mitigation (SURVEY §4 P11) for the hot hosts,
+        # the plain host window for the rest: FIFO order is preserved
+        # exactly (range buckets are monotone in the ordering tuple);
+        # the politeness schedule salts the same hosts
+        hot_hosts = self._hot_hosts(st)
+        page_rows = skew.host_seq(
+            page_rows, order, hot_hosts=hot_hosts, seq_col="_rn_host"
+        )
         page_rows = page_rows.withColumn(
             "seq", F.coalesce(F.col("last_seq"), F.lit(0)) + F.col("_rn_host")
         )
@@ -931,9 +903,7 @@ class CrawlEngine:
             # no partition-less window.  No "did we drop anything" probe:
             # truncation at all makes the post-filter visit count exactly
             # `remaining`, so the wave-end max_visits check stops the crawl
-            from crawlspark.operators.skew import global_cumsum_skewproof
-
-            phased = global_cumsum_skewproof(
+            phased = skew.global_cumsum_skewproof(
                 phased.withColumn("_isv", _is_visit().cast("int")),
                 "_isv",
                 ORD_COLS + ["url_norm", "fetch_rank"],
@@ -1210,9 +1180,9 @@ class CrawlEngine:
         seen_inc: DataFrame,
         host_state: DataFrame,
         deferred_new: DataFrame | None,
-    ) -> tuple[list, DataFrame]:
-        """Commit the wave's state into ``st``: (stats rows, committed
-        seen increment).
+    ) -> tuple[list, tuple[DataFrame, int]]:
+        """Commit the wave's state into ``st``: (stats rows, (committed
+        seen increment, its row count)).
 
         The candidates commit runs FIRST: it is the one job that
         traverses the whole wave (admission → robots gate → fetch →
@@ -1221,7 +1191,7 @@ class CrawlEngine:
         commit then only scan warm caches, and overlap as one burst of
         concurrent jobs."""
         wave = st.wave
-        st.candidates, st.cand_rows = self._ckpt_counted(
+        st.candidates, st.cand_rows = self._ckpt(
             next_candidates, "candidates", wave
         )
         with ThreadPoolExecutor(5) as pool:
@@ -1236,11 +1206,11 @@ class CrawlEngine:
                 else None
             )
             deferred = (
-                pool.submit(self._ckpt_counted, deferred_new, "deferred", wave)
+                pool.submit(self._ckpt, deferred_new, "deferred", wave)
                 if deferred_new is not None
                 else None
             )
-            st.host_state = hosts.result()
+            st.host_state, _ = hosts.result()
             if lineage is not None:
                 lineage.result()
             st.deferred, st.deferred_rows = (
@@ -1250,7 +1220,7 @@ class CrawlEngine:
 
     def _build_bloom(self, st: WaveState, rows: DataFrame, wave: int) -> None:
         """Build shards over ``rows``, OR them into the current shards
-        (if any) with a |pid|-row cogroup, and commit — all
+        (if any) with a |pid|-row groupBy, and commit — all
         executor-side; nothing lands on the driver.  The probe words are
         re-derived at the next admission."""
         from crawlspark.operators.seen import build_bloom, merge_blooms
@@ -1264,30 +1234,28 @@ class CrawlEngine:
         )
         if st.bloom is not None:
             shards = merge_blooms(st.bloom.unionByName(shards))
-        st.bloom = self._ckpt(shards, "bloom", wave)
+        st.bloom, _ = self._ckpt(shards, "bloom", wave)
         st.bloom_fold_wave = wave
         st.bloom_pending_parts, st.bloom_pending_rows = [], 0
         if st.bloom_words is not None:
             st.bloom_words.unpersist()
             st.bloom_words = None
 
-    def _advance_seen(self, st: WaveState, seen_inc: DataFrame) -> None:
-        """Append the committed increment to the seen set: row tracking
-        from commit metadata, compaction, Bloom fold or engagement."""
+    def _advance_seen(
+        self, st: WaveState, seen_inc: DataFrame, inc_rows: int
+    ) -> None:
+        """Append the committed increment to the seen set: row tracking,
+        compaction, Bloom fold or engagement."""
         opts, wave = self.opts, st.wave
         st.seen_parts.append(seen_inc)
-        inc_rows = (
-            self._store.rows("seen_inc", wave) if self._store is not None else None
-        )
-        if st.seen_rows is not None and inc_rows is not None:
-            st.seen_rows += inc_rows
-        else:
-            st.seen_rows = None
+        st.seen_rows += inc_rows
         # increment compaction (Iceberg rewrite analog): collapse the
         # O(waves) union into one snapshot so the next wave's probe
         # plans against a single relation
         if opts.seen_compact_every > 0 and len(st.seen_parts) > opts.seen_compact_every:
-            st.seen_parts = [self._ckpt(_union(st.seen_parts), "seen_snapshot", wave)]
+            st.seen_parts = [
+                self._ckpt(_union(st.seen_parts), "seen_snapshot", wave)[0]
+            ]
             st.seen_snapshot_wave = wave
         if st.bloom is not None:
             # LAZY fold: this wave's increment joins the pending set
@@ -1296,21 +1264,12 @@ class CrawlEngine:
             # meaningful fraction of shard capacity — per-wave bloom
             # cost in the common case: zero jobs
             st.bloom_pending_parts.append(seen_inc)
-            if inc_rows is None:
-                # no metadata count (non-durable mode) — bound the
-                # pending set by wave count instead of rows
-                fold_now = len(st.bloom_pending_parts) >= 4
-            else:
-                st.bloom_pending_rows += inc_rows
-                fold_min = opts.bloom_fold_min_rows
-                if fold_min <= 0:
-                    fold_min = max(
-                        100_000,
-                        opts.bloom_expected_per_partition
-                        * opts.bloom_partitions // 8,
-                    )
-                fold_now = st.bloom_pending_rows >= fold_min
-            if fold_now:
+            st.bloom_pending_rows += inc_rows
+            fold_min = BLOOM_FOLD_MIN_ROWS or max(
+                100_000,
+                opts.bloom_expected_per_partition * opts.bloom_partitions // 8,
+            )
+            if st.bloom_pending_rows >= fold_min:
                 self._build_bloom(st, _union(st.bloom_pending_parts), wave)
         elif opts.use_bloom_seen and not self._bloom_dormant(st):
             # the seen set crossed the dormancy gate: engage with ONE

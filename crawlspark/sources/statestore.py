@@ -26,7 +26,7 @@ Mapping (parquet analog → Iceberg):
 | candidates / seen_inc / host_state / deferred / metrics per wave | `wave=N/<name>` dir overwrite | `append` into `<ns>.<name>` with a `wave` column (hidden partition `identity(wave)`; row-keyed tables add `bucket(url_norm)`) |
 | seen snapshot compaction | one `seen_snapshot` dir replacing inc dirs | `rewrite_data_files` / `MERGE INTO` the compacted snapshot |
 | MANIFEST.json resume pointer | driver-side JSON | table snapshot ids (`.history()`), `VERSION AS OF` reads |
-| row-count fixpoint check | parquet footer scan | `SELECT count(*) ... VERSION AS OF` (metadata-only in Iceberg) |
+| row counts read on resume (commits count themselves) | parquet footer scan | `SELECT count(*) ... VERSION AS OF` (metadata-only in Iceberg) |
 | table schema for read-back | `_schema.json` inside each committed dir, replaced with it | table metadata (schema is part of every snapshot) |
 
 The parquet store's schema record lets ``commit()`` and ``read()``
@@ -80,8 +80,9 @@ class StateStore:
         raise NotImplementedError
 
     def rows(self, name: str, wave: int) -> int | None:
-        """Exact committed row count from storage METADATA if the
-        backend can answer without a job, else None."""
+        """Exact committed row count from storage METADATA, without a
+        job; None when the table does not exist.  The engine counts its
+        own commits and calls this only on resume."""
         raise NotImplementedError
 
     def put_manifest(self, manifest: dict) -> None:
@@ -122,13 +123,14 @@ class ParquetStateStore(StateStore):
         return self.spark.read.schema(schema).parquet(path)
 
     def rows(self, name: str, wave: int) -> int | None:
-        try:
-            import pyarrow.dataset as pads
+        import pyarrow.dataset as pads
 
+        # only a missing table reads as None: an unreadable file raises
+        try:
             return pads.dataset(
                 self._path(name, wave), format="parquet"
             ).count_rows()
-        except Exception:
+        except FileNotFoundError:
             return None
 
     def put_manifest(self, manifest: dict) -> None:

@@ -733,12 +733,16 @@ class TestFetchHooks:
         assert res2.counters.fetched_robots == 0
 
 
-def test_all_scale_options_compose(spark, fixture_pages, tmp_path):
+def test_all_scale_options_compose(spark, fixture_pages, tmp_path, monkeypatch):
     """Every scale knob at once (bloom sidecar + salted sequencing +
     seen compaction + durable commits) produces the exact
     baseline crawl: counters, seen set, per-host visit order."""
+    import crawlspark.operators.skew as skew
+
     seeds = ["http://hosta/page1.html", "http://hosta/page4.html"]
     base = crawl(spark, fixture_pages, seeds)
+    # force the salted path at fixture scale
+    monkeypatch.setattr(skew, "SALT_THRESHOLD_ROWS", 1)
     res = CrawlEngine(
         spark,
         fixture_pages,
@@ -747,8 +751,6 @@ def test_all_scale_options_compose(spark, fixture_pages, tmp_path):
             use_bloom_seen=True, bloom_min_seen_rows=0,
             bloom_partitions=4,
             bloom_expected_per_partition=1000,
-            salt_hot_hosts=True,
-            salt_threshold_rows=1,  # force the salted path at fixture scale
             seen_compact_every=2,
             checkpoint_dir=str(tmp_path / "ck"),
         ),

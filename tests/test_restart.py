@@ -8,6 +8,7 @@ import os
 import shutil
 from dataclasses import asdict, dataclass
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,6 +121,21 @@ def test_resume_without_seed_tables_recomputes_them(
     assert _seen_set(resumed) == _seen_set(full)
     assert (resumed.n_seeds, resumed.n_seed_hosts) == (3, 2)
     assert os.path.exists(os.path.join(ckdir, "seed", "seed_hosts"))
+
+
+def test_resume_rejects_unreadable_seed_table(
+    spark, fixture_pages, one_wave_ck, tmp_path
+):
+    # an unreadable seed table is not a missing one: resume must fail
+    # instead of recommitting the seed stage from the seeds it is given
+    ckdir = str(tmp_path / "ck")
+    engine = _resumer(spark, fixture_pages, one_wave_ck, ckdir)
+    parts = glob.glob(os.path.join(ckdir, "seed", "seed_hosts", "*.parquet"))
+    assert parts
+    with open(parts[0], "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        engine.resume(SEEDS)
 
 
 def test_seed_hosts_plan_evaluates_canonicalize_once(spark, fixture_pages):
@@ -239,30 +255,34 @@ BASE_READS = {
 
 
 @pytest.mark.parametrize(
-    "parts, reads",
+    "parts, reads, resolved",
     [
-        ({}, BASE_READS),
-        ({"deferred_rows": 4}, BASE_READS | {("deferred", 2)}),
-        ({"bloom_fold_wave": 0}, BASE_READS | {("bloom", 0)}),
+        ({}, BASE_READS, {}),
+        ({"deferred_rows": 4}, BASE_READS | {("deferred", 2)}, {}),
+        ({"bloom_fold_wave": 0}, BASE_READS | {("bloom", 0)}, {}),
         (
             {"seen_snapshot_wave": 1},
             BASE_READS - {("seen_inc", 0), ("seen_inc", 1)}
             | {("seen_snapshot", 1)},
+            {},
         ),
-        ({"has_initial_seen": True}, BASE_READS | {("seen_inc", -1)}),
+        ({"has_initial_seen": True}, BASE_READS | {("seen_inc", -1)}, {}),
+        # unrecorded counts resolve from the store's metadata: three
+        # seen tables and the deferred table, 7 rows each
         (
             {"seen_rows": None, "deferred_rows": None},
             BASE_READS | {("deferred", 2)},
+            {"seen_rows": 21, "deferred_rows": 7},
         ),
     ],
     ids=["plain", "deferred", "bloom_fold", "seen_snapshot", "initial_seen",
          "unknown_counts"],
 )
-def test_wave_state_manifest_round_trip(parts, reads):
+def test_wave_state_manifest_round_trip(parts, reads, resolved):
     manifest = _manifest(**parts)
     store = _FakeStore(manifest)
     state = WaveState.load(store, use_bloom=True)
-    assert state.manifest() == manifest
+    assert state.manifest() == {**manifest, **resolved}
     assert store.reads == reads
 
 
@@ -271,8 +291,9 @@ def test_parent_manifest_still_loads():
     manifest = _manifest(bloom_fold_wave=-1, has_initial_seen=True)
     del manifest["seen_rows"]
     state = WaveState.load(_FakeStore(manifest), use_bloom=True)
-    # unknown seen count: the Bloom gate engages, as before
-    assert state.seen_rows is None
+    # the seen count is summed from the four seen tables it opens
+    # (the initial seen set and increments 0..2), 7 rows each
+    assert state.seen_rows == 28
     assert state.bloom_pending_parts == [_Table("seen_inc", w) for w in range(3)]
     assert state.bloom_pending_rows == 21
-    assert state.manifest() == {**manifest, "seen_rows": None}
+    assert state.manifest() == {**manifest, "seen_rows": 28}

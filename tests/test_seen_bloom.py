@@ -71,39 +71,6 @@ def test_merge_blooms(spark):
     assert not rows["http://h/zzz"]
 
 
-def test_apply_bloom_df_matches_collected(spark):
-    """The cogroup shard-table probe (the 10^10-URL path) returns the
-    same maybe_seen verdicts as the collected-shard-list form, and ORs
-    unmerged increment rows on the fly."""
-    from crawlspark.operators.seen import apply_bloom_df
-
-    kw = dict(num_partitions=4, expected_per_partition=500, fpp=0.01)
-    a = spark.range(300).select(
-        F.concat(F.lit("http://h/a"), F.col("id")).alias("url_norm")
-    )
-    b = spark.range(300).select(
-        F.concat(F.lit("http://h/b"), F.col("id")).alias("url_norm")
-    )
-    # two UNMERGED increments in one shard table
-    shards_df = build_bloom(a, **kw).unionByName(build_bloom(b, **kw))
-    cands = spark.range(900).select(
-        F.concat(F.lit("http://h/a"), F.col("id")).alias("url_norm")
-    )
-    via_df = {
-        r["url_norm"]: r["maybe_seen"]
-        for r in apply_bloom_df(cands, shards_df, **kw).collect()
-    }
-    via_list = {
-        r["url_norm"]: r["maybe_seen"]
-        for r in apply_bloom(
-            cands, collect_shards(merge_blooms(shards_df)), **kw
-        ).collect()
-    }
-    assert via_df == via_list
-    for i in range(300):  # no false negatives
-        assert via_df[f"http://h/a{i}"]
-
-
 def test_apply_bloom_join_matches_collected(spark):
     """The pure-JVM broadcast-join probe agrees with the numpy probe
     (same signed-arithmetic bit layout) and has no false negatives."""
@@ -132,30 +99,6 @@ def test_apply_bloom_join_matches_collected(spark):
         assert via_join[f"http://h/s{i}"], f"false negative at {i}"
     fps = sum(1 for i in range(600, 1800) if via_join[f"http://h/s{i}"])
     assert fps / 1200 < 0.05
-
-
-def test_engine_with_bloom_cogroup_probe(spark, fixture_pages):
-    """The distributed cogroup probe (10^10 path) gives identical crawl
-    results to the broadcast-join probe."""
-    from crawlspark.config import Options
-    from crawlspark.plans.engine import CrawlEngine
-
-    seeds = ["http://hosta/page1.html", "http://hosta/page4.html"]
-    kw = dict(
-        crawl_delay_ms=100, use_bloom_seen=True, bloom_min_seen_rows=0, bloom_partitions=4,
-        bloom_expected_per_partition=1000, bloom_fpp=0.01,
-    )
-    a = CrawlEngine(
-        spark, fixture_pages, Options(bloom_probe="join", **kw)
-    ).run(seeds)
-    b = CrawlEngine(
-        spark, fixture_pages, Options(bloom_probe="cogroup", **kw)
-    ).run(seeds)
-    assert a.counters.visit == b.counters.visit == 5
-    assert a.counters.filter == b.counters.filter == 13
-    sa = {r[0] for r in a.seen.select("url_norm").collect()}
-    sb = {r[0] for r in b.seen.select("url_norm").collect()}
-    assert sa == sb
 
 
 def test_resume_with_bloom_matches_full(spark, fixture_pages, tmp_path):
@@ -456,13 +399,6 @@ class TestBloomNullHashes:
         assert nulls == [False, False]  # null key → definitely unseen
         return by_url
 
-    def test_cogroup_probe(self, spark, seen_and_cands):
-        from crawlspark.operators.seen import apply_bloom_df, build_bloom
-
-        seen, cands = seen_and_cands
-        shards = build_bloom(seen, num_partitions=4)
-        self._check(apply_bloom_df(cands, shards, num_partitions=4).collect())
-
     def test_collected_shard_probe(self, spark, seen_and_cands):
         from crawlspark.operators.seen import (
             apply_bloom, build_bloom, collect_shards,
@@ -481,7 +417,7 @@ class TestBloomNullHashes:
 
     def test_engine_cogroup_with_unparsable_link(self, spark, tmp_path):
         """A crawl whose pages harvest an unparsable URL (null url_norm
-        after canonicalization) must not crash in cogroup bloom mode."""
+        after canonicalization) must not crash in bloom mode."""
         from crawlspark.fixtures import fixture_pages_df
         from crawlspark.sources.pages import PagesSource
 
@@ -501,7 +437,6 @@ class TestBloomNullHashes:
             Options(
                 crawl_delay_ms=1,
                 use_bloom_seen=True, bloom_min_seen_rows=0,
-                bloom_probe="cogroup",
                 bloom_partitions=4,
             ),
         ).run(["http://hosta/page1.html"])
@@ -523,19 +458,25 @@ class TestBloomLazyFold:
         ).run(["http://hosta/page1.html", "http://hostb/page1.html"])
         return res
 
-    def test_fold_policies_match_plain(self, spark, fixture_pages, tmp_path):
+    def test_fold_policies_match_plain(
+        self, spark, fixture_pages, tmp_path, monkeypatch
+    ):
+        import crawlspark.plans.engine as engine_mod
+
         base = self._crawl(spark, fixture_pages, str(tmp_path / "p"))
+        # never folds at fixture scale
+        monkeypatch.setattr(engine_mod, "BLOOM_FOLD_MIN_ROWS", 10_000)
         lazy = self._crawl(
             spark, fixture_pages, str(tmp_path / "l"),
             use_bloom_seen=True, bloom_min_seen_rows=0, bloom_partitions=4,
             bloom_expected_per_partition=1000,
-            bloom_fold_min_rows=10_000,  # never folds at fixture scale
         )
+        # folds after every wave
+        monkeypatch.setattr(engine_mod, "BLOOM_FOLD_MIN_ROWS", 1)
         eager = self._crawl(
             spark, fixture_pages, str(tmp_path / "e"),
             use_bloom_seen=True, bloom_min_seen_rows=0, bloom_partitions=4,
             bloom_expected_per_partition=1000,
-            bloom_fold_min_rows=1,  # folds after every wave
         )
         for res in (lazy, eager):
             assert vars(res.counters) == vars(base.counters)
@@ -593,14 +534,6 @@ class TestBloomNullBatchPrecision:
         self._check(
             apply_bloom(cands, collect_shards(shards), **BLOOM_KW).collect()
         )
-
-    def test_cogroup_probe(self, spark, seen_cands_shards):
-        # null rows now hash to a REAL pid (non-null coalesced hashes),
-        # so they share a cogroup with valid rows — same exactness bar
-        from crawlspark.operators.seen import apply_bloom_df
-
-        _, cands, shards = seen_cands_shards
-        self._check(apply_bloom_df(cands, shards, **BLOOM_KW).collect())
 
     def test_join_probe(self, spark, seen_cands_shards):
         from crawlspark.operators.seen import apply_bloom_join

@@ -1,7 +1,7 @@
 """Hot-host salted sequencing (SURVEY §4 P11): the skew-proof two-phase
 ranking must be BIT-IDENTICAL to the plain host window, on a skewed
 input where one host dwarfs the rest, and the full engine must produce
-the same crawl with the option on and off."""
+the same crawl with salting forced on and off."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -173,24 +173,9 @@ def test_hot_cold_split_matches_plain_window(spark, skewed):
         ), hot
 
 
-def test_hot_hosts_over_detection_and_skip(spark, skewed):
-    """hot_hosts_over finds exactly the hosts at/over the threshold, and
-    the upper_bound short-circuit skips the count job (returns [])."""
-    from crawlspark.operators.skew import hot_hosts_over
-
-    assert hot_hosts_over(skewed, 1000) == ["host0"]
-    assert hot_hosts_over(skewed, 21) == ["host0"]
-    # threshold exactly at a cold host's count includes it
-    assert sorted(hot_hosts_over(skewed, 20)) == sorted(
-        ["host%d" % i for i in range(51)]
-    )
-    # known bound below threshold → no host can be hot, no job runs
-    assert hot_hosts_over(skewed, 1000, upper_bound=999) == []
-    assert hot_hosts_over(skewed, 0) == []
-
-
-def test_engine_parity_salted_vs_plain(spark):
+def test_engine_parity_salted_vs_plain(spark, monkeypatch):
     """Same crawl (visit order, schedule, counters) with salting on/off."""
+    import crawlspark.operators.skew as skew
     from crawlspark.config import Options
     from crawlspark.fixtures import fixture_pages_df
     from crawlspark.plans.engine import CrawlEngine
@@ -200,14 +185,13 @@ def test_engine_parity_salted_vs_plain(spark):
 
     def run(salt: bool):
         pages = PagesSource(pages_df, versioned=False)
-        # salt_threshold_rows=1 → every host goes through the salted
-        # machinery even at fixture scale (the production threshold
-        # would correctly leave this tiny crawl entirely on the plain
-        # window, which is the same code path as salt=False)
-        opts = Options(
-            crawl_delay_ms=100, same_host_only=False, salt_hot_hosts=salt,
-            salt_threshold_rows=1,
+        # a threshold of 1 → every host goes through the salted
+        # machinery even at fixture scale; the production threshold
+        # leaves this tiny crawl entirely on the plain window
+        monkeypatch.setattr(
+            skew, "SALT_THRESHOLD_ROWS", 1 if salt else 1_000_000
         )
+        opts = Options(crawl_delay_ms=100, same_host_only=False)
         res = CrawlEngine(spark, pages, opts).run(
             ["http://hosta/page1.html", "http://hostb/page1.html"]
         )
@@ -228,7 +212,7 @@ def test_engine_parity_salted_vs_plain(spark):
     assert vars(c_plain) == vars(c_salt)
 
 
-def test_hot_stat_populates_host_state(spark):
+def test_hot_stat_populates_host_state(spark, monkeypatch):
     """The scheduling statistic behind hot-host detection must actually
     POPULATE: detection reads host_state.last_wave_rows (the previous
     wave's PRE-CAP per-host batch size), and since any host list is
@@ -243,11 +227,13 @@ def test_hot_stat_populates_host_state(spark):
     from crawlspark.plans.engine import CrawlEngine
     from crawlspark.sources.pages import PagesSource
 
+    import crawlspark.operators.skew as skew
+
     pages = PagesSource(fixture_pages_df(spark), versioned=False)
+    monkeypatch.setattr(skew, "SALT_THRESHOLD_ROWS", 1)
     opts = Options(
-        crawl_delay_ms=100, same_host_only=False, salt_hot_hosts=True,
-        salt_threshold_rows=1, max_urls_per_host_per_wave=1,
-        max_waves=2,
+        crawl_delay_ms=100, same_host_only=False,
+        max_urls_per_host_per_wave=1, max_waves=2,
     )
     res = CrawlEngine(spark, pages, opts).run(
         ["http://hosta/page1.html", "http://hostb/page1.html"]
