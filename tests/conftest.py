@@ -28,6 +28,14 @@ def spark():
             "spark.sql.ui.retainedExecutions": "20",
             "spark.ui.retainedJobs": "200",
             "spark.ui.retainedStages": "200",
+            # On CPython 3.11 the stock worker re-reads pyspark.zip's
+            # directory 16 times before every Python task (~0.3 s);
+            # crawl tests run hundreds of such tasks each.
+            "spark.python.daemon.module": "crawlspark.workerd",
+            # A crawl generates ~700 classes; with the default 100-entry
+            # cache every wave recompiles its plans' code.  Crawl tests
+            # share plan shapes, so a larger cache compiles each once.
+            "spark.sql.codegen.cache.maxEntries": "4000",
         },
     )
     yield s
